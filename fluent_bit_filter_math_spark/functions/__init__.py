@@ -21,8 +21,13 @@ in both engines.
 
 from __future__ import annotations
 
+from typing import Callable
+
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from fluent_bit_filter_math_spark import memo
 
 # ---------------------------------------------------------------------------
 # Cross-engine 60-bit hash.
@@ -79,22 +84,6 @@ def fixed_round(col: Column, dp: int) -> Column:
     return F.floor(col * F.lit(s) + F.lit(0.5)) / F.lit(s)
 
 
-def duck_fixed_point(expr: str, scale: int) -> str:
-    """DuckDB SQL spelling of :func:`fixed_point`."""
-    return f"CAST(floor(({expr}) * {scale}.0 + 0.5) AS BIGINT)"
-
-
-def duck_cents(expr: str) -> str:
-    """DuckDB SQL spelling of :func:`exact_cents`."""
-    return duck_fixed_point(expr, 100)
-
-
-def duck_fixed_round(expr: str, dp: int) -> str:
-    """DuckDB SQL spelling of :func:`fixed_round`."""
-    s = 10**dp
-    return f"(floor(({expr}) * {s}.0 + 0.5) / {s}.0)"
-
-
 # ---------------------------------------------------------------------------
 # Tokenization.
 # ---------------------------------------------------------------------------
@@ -117,16 +106,14 @@ def tokens(col: Column) -> Column:
 # charged 0.77 s of sim_ann_retrain's 7.8 s wall to HOF construction
 # alone). The UNRESOLVED expression tree is immutable and name-scoped,
 # so identical (helper, operand-text) builds are interchangeable across
-# plans — cache them. Lambda variables created by earlier builds carry
-# session-unique names (x_0, x_1, ...), so an operand that embeds one
-# (a helper called inside another lambda) produces a unique key and
-# simply never shares — safe by construction. Keys come from the JVM
-# expression text (one cheap py4j call) or the bare string for str
-# operands.
-_VEC_EXPR_CACHE: dict[tuple, Column] = {}
-
-
-def _vec_key(kind: str, *cols) -> tuple | None:
+# plans — cache them in the context-scoped memo (a Column is bound to
+# its SparkContext's JVM, so another context must never get it; ADVICE
+# r17). Lambda variables created by earlier builds carry session-unique
+# names (x_0, x_1, ...), so an operand that embeds one (a helper called
+# inside another lambda) produces a unique key and simply never
+# shares — safe by construction. Keys come from the JVM expression text
+# (one cheap py4j call) or the bare string for str operands.
+def _vec_cached(kind: str, build: Callable[[], Column], *cols) -> Column:
     parts = []
     for c in cols:
         if isinstance(c, str):
@@ -135,8 +122,10 @@ def _vec_key(kind: str, *cols) -> tuple | None:
             try:
                 parts.append(c._jc.toString())
             except Exception:  # noqa: BLE001 — cache is optional
-                return None
-    return (kind, *parts)
+                return build()
+    return memo.get(
+        SparkContext._active_spark_context, "vec", None, build, kind, *parts
+    )
 
 
 def _as_col(c) -> Column:
@@ -145,44 +134,35 @@ def _as_col(c) -> Column:
 
 def dot(a: Column | str, b: Column | str) -> Column:
     """Sequential-fold dot product in double precision."""
-    key = _vec_key("dot", a, b)
-    cached = _VEC_EXPR_CACHE.get(key) if key else None
-    if cached is not None:
-        return cached
-    a, b = _as_col(a), _as_col(b)
-    col = F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    if key:
-        _VEC_EXPR_CACHE[key] = col
-    return col
+
+    def build() -> Column:
+        return F.aggregate(
+            F.zip_with(
+                _as_col(a),
+                _as_col(b),
+                lambda x, y: x.cast("double") * y.cast("double"),
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+
+    return _vec_cached("dot", build, a, b)
 
 
 def norm(a: Column | str) -> Column:
-    key = _vec_key("norm", a)
-    cached = _VEC_EXPR_CACHE.get(key) if key else None
-    if cached is not None:
-        return cached
-    col = F.sqrt(
-        F.aggregate(
-            _as_col(a),
-            F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
+    def build() -> Column:
+        return F.sqrt(
+            F.aggregate(
+                _as_col(a),
+                F.lit(0.0),
+                lambda acc, x: acc + x.cast("double") * x.cast("double"),
+            )
         )
-    )
-    if key:
-        _VEC_EXPR_CACHE[key] = col
-    return col
+
+    return _vec_cached("norm", build, a)
 
 
 def cosine(a: Column | str, b: Column | str) -> Column:
-    key = _vec_key("cosine", a, b)
-    cached = _VEC_EXPR_CACHE.get(key) if key else None
-    if cached is not None:
-        return cached
-    col = dot(a, b) / (norm(a) * norm(b))
-    if key:
-        _VEC_EXPR_CACHE[key] = col
-    return col
+    return _vec_cached(
+        "cosine", lambda: dot(a, b) / (norm(a) * norm(b)), a, b
+    )

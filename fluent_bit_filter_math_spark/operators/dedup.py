@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluent_bit_filter_math_spark import memo
 from fluent_bit_filter_math_spark.concurrency import overlap
 from fluent_bit_filter_math_spark.functions import duck_hash60, hash60, tokens
 from fluent_bit_filter_math_spark.registry import register
@@ -110,38 +111,29 @@ def _docs_shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # decision a production pipeline makes by persisting its shingle index
 # before the all-pairs stage.
 #
-# Keyed by applicationId (stable per SparkContext — id(spark) can be
-# reused by a new session after GC and hand out frames bound to a dead
-# context; ADVICE r1) and released explicitly via release_shingle_index().
-_SHINGLE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+# Held in the context-scoped memo (memo.py) and released explicitly via
+# release_shingle_index().
 
 
 def _shingle_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(per-doc shingle arrays, exploded doc_id→shingle index), cached."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHINGLE_CACHE:
+
+    def build() -> tuple[DataFrame, DataFrame]:
         arrays = _docs_shingled(spark, sf_dir).filter(F.size("sh") > 0).cache()
         exploded = arrays.select(
             "doc_id", F.explode("sh").alias("s")
         ).cache()
-        _SHINGLE_CACHE[key] = (arrays, exploded)
-    return _SHINGLE_CACHE[key]
+        return arrays, exploded
+
+    return memo.get(spark, "shingle_index", sf_dir, build)
 
 
 def release_shingle_index(spark: SparkSession, sf_dir: str | None = None) -> None:
     """Unpersist and evict the cached shingle index for *spark* (one sf_dir,
     or all of the session's entries when sf_dir is None)."""
-    app_id = spark.sparkContext.applicationId
-    for key in [
-        k
-        for k in _SHINGLE_CACHE
-        if k[0] == app_id and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        arrays, exploded = _SHINGLE_CACHE.pop(key)
-        exploded.unpersist()
-        arrays.unpersist()
+    memo.release(spark, "shingle_index", sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1604,15 +1596,13 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 # downstream consumer (the cluster query itself, the composed curation
 # pipeline, any keep/drop materialization) needs the same assignment —
 # a production pipeline materializes it once per corpus snapshot. Same
-# lifecycle discipline as the shingle index: applicationId-keyed,
-# explicit release.
-_CLUSTER_CACHE: dict[tuple[str, str], DataFrame] = {}
+# lifecycle discipline as the shingle index: memo-held, explicit release.
 
 
 def cluster_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) for every document; cached per session+dir."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CLUSTER_CACHE:
+
+    def build() -> DataFrame:
         pairs = dedup_minhash_lsh(spark, sf_dir).select(
             F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
         )
@@ -1623,21 +1613,16 @@ def cluster_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         comp = docs.join(stars, "doc_id", "left").select(
             "doc_id", F.coalesce("root", "doc_id").alias("cluster_id")
         )
-        _CLUSTER_CACHE[key] = comp.cache()
-    return _CLUSTER_CACHE[key]
+        return comp.cache()
+
+    return memo.get(spark, "cluster_map", sf_dir, build)
 
 
 def release_cluster_map(
     spark: SparkSession, sf_dir: str | None = None
 ) -> None:
     """Unpersist and evict the cached cluster map for *spark*."""
-    app_id = spark.sparkContext.applicationId
-    for key in [
-        k
-        for k in _CLUSTER_CACHE
-        if k[0] == app_id and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        _CLUSTER_CACHE.pop(key).unpersist()
+    memo.release(spark, "cluster_map", sf_dir)
 
 
 # ---------------------------------------------------------------------------

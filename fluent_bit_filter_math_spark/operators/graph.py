@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluent_bit_filter_math_spark import memo
 from fluent_bit_filter_math_spark.ckpt import release_local_checkpoint
 from fluent_bit_filter_math_spark.functions import duck_hash60, hash60
 from fluent_bit_filter_math_spark.registry import register
@@ -63,16 +64,15 @@ _D_EDGES = """
 # scan per reference (~3 scans × PR_ITERS rounds). Materializing them
 # once per (session, sf_dir) is the same decision every iterative
 # graph engine makes before its loop — and the same lifecycle pattern
-# as operators/dedup.py's shingle index (explicit release, appId key).
-_EDGE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
+# as operators/dedup.py's shingle index (memo-held, explicit release).
 
 
 def _edge_index(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """(bidirectional edge list, per-node degree), cached per session."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _EDGE_CACHE:
+
+    def build() -> tuple[DataFrame, DataFrame]:
         li = table(spark, sf_dir, "lineitem")
         pairs = li.select(
             F.col("l_partkey").alias("p"), F.col("l_suppkey").alias("s")
@@ -94,23 +94,16 @@ def _edge_index(
         # behavior we want at every scale; left alone.
         edges = fwd.unionAll(bwd).cache()
         deg = edges.groupBy("src").agg(F.count("*").alias("d")).cache()
-        _EDGE_CACHE[key] = (edges, deg)
-    return _EDGE_CACHE[key]
+        return edges, deg
+
+    return memo.get(spark, "edge_index", sf_dir, build)
 
 
 def release_edge_index(
     spark: SparkSession, sf_dir: str | None = None
 ) -> None:
     """Unpersist and evict the session's cached edge index."""
-    app_id = spark.sparkContext.applicationId
-    for key in [
-        k
-        for k in _EDGE_CACHE
-        if k[0] == app_id and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        edges, deg = _EDGE_CACHE.pop(key)
-        deg.unpersist()
-        edges.unpersist()
+    memo.release(spark, "edge_index", sf_dir)
 
 
 def _d_iter(i: int) -> str:
@@ -608,10 +601,6 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return n_nodes.crossJoin(n_edges).crossJoin(n_tri)
 
 
-_TRI_UND_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-_TRI_O_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _tri_shared(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -624,19 +613,19 @@ def _tri_shared(
     :func:`_tri_orient`, which adds the memoized orientation) and
     graph_boruvka_msf (which needs only edges + nodes — the
     orientation is NOT built on its behalf)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TRI_UND_CACHE:
-        return _TRI_UND_CACHE[key]
-    und = _tri_und_build(spark, sf_dir).localCheckpoint(eager=True)
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .unionAll(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("d"))
-        .localCheckpoint(eager=True)
-    )
-    _TRI_UND_CACHE[key] = (und, deg)
-    return und, deg
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        und = _tri_und_build(spark, sf_dir).localCheckpoint(eager=True)
+        deg = (
+            und.select(F.col("a").alias("v"))
+            .unionAll(und.select(F.col("b").alias("v")))
+            .groupBy("v")
+            .agg(F.count("*").alias("d"))
+            .localCheckpoint(eager=True)
+        )
+        return und, deg
+
+    return memo.get(spark, "tri_und", sf_dir, build)
 
 
 def _tri_orient(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -646,50 +635,37 @@ def _tri_orient(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(m^1.5) product — stays lazy per query so triangle rows are
     never materialized (the one thing that would NOT scale to
     100 TB)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TRI_O_CACHE:
-        return _TRI_O_CACHE[key]
-    und, deg = _tri_shared(spark, sf_dir)
-    da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
-    lower = (F.col("da") < F.col("db")) | (
-        (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
-    )
-    # No broadcast hint on the degree table: it is |V|-cardinality and
-    # grows with the graph — let Catalyst choose (it broadcasts at
-    # fixture scale anyway, and shuffles when |V| demands it).
-    o = (
-        und.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(lower, F.col("a")).otherwise(F.col("b")).alias("src"),
-            F.when(lower, F.col("b")).otherwise(F.col("a")).alias("dst"),
+
+    def build() -> DataFrame:
+        und, deg = _tri_shared(spark, sf_dir)
+        da = deg.select(F.col("v").alias("a"), F.col("d").alias("da"))
+        db = deg.select(F.col("v").alias("b"), F.col("d").alias("db"))
+        lower = (F.col("da") < F.col("db")) | (
+            (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
         )
-        # checkpoint: o is referenced by BOTH wedge legs, and a lazy o
-        # re-inlines the degree aggregate + two rank joins into each
-        # reference (the lineage-doubling rule).
-        .localCheckpoint(eager=True)
-    )
-    _TRI_O_CACHE[key] = o
-    return o
+        # No broadcast hint on the degree table: it is |V|-cardinality and
+        # grows with the graph — let Catalyst choose (it broadcasts at
+        # fixture scale anyway, and shuffles when |V| demands it).
+        return (
+            und.join(da, "a")
+            .join(db, "b")
+            .select(
+                F.when(lower, F.col("a")).otherwise(F.col("b")).alias("src"),
+                F.when(lower, F.col("b")).otherwise(F.col("a")).alias("dst"),
+            )
+            # checkpoint: o is referenced by BOTH wedge legs, and a lazy o
+            # re-inlines the degree aggregate + two rank joins into each
+            # reference (the lineage-doubling rule).
+            .localCheckpoint(eager=True)
+        )
+
+    return memo.get(spark, "tri_o", sf_dir, build)
 
 
 def release_tri_und(spark: SparkSession, sf_dir: str | None = None) -> None:
     """Evict the session's checkpointed co-occurrence graph frames AND
-    free their storage blocks (popping the dict alone deferred reclaim
-    to GC — ADVICE r12)."""
-    app_id = spark.sparkContext.applicationId
-    for cache in (_TRI_UND_CACHE, _TRI_O_CACHE):
-        for key in [
-            k
-            for k in cache
-            if k[0] == app_id and (sf_dir is None or k[1] == sf_dir)
-        ]:
-            frames = cache.pop(key)
-            for df in (
-                frames if isinstance(frames, tuple) else (frames,)
-            ):
-                release_local_checkpoint(df)
+    free their storage blocks (ADVICE r12)."""
+    memo.release(spark, ("tri_und", "tri_o"), sf_dir)
 
 
 def _tri_pipeline(
@@ -847,9 +823,6 @@ def graph_clustering_coefficient(
 # partition-independent, so the plain SQL verifies the optimized
 # plan exactly.
 # ---------------------------------------------------------------------------
-_TRI_ORIENTED_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _tri_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-oriented co-purchase edge list, cached per (session,
     sf_dir) — the frame is referenced three times downstream (both
@@ -858,56 +831,57 @@ def _tri_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree join): the initial plan carried 184 Exchange nodes before
     runtime reuse collapsed them. Materializing once is the same call
     every triangle-counting engine makes before its wedge phase, and
-    the same lifecycle pattern as _EDGE_CACHE above."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TRI_ORIENTED_CACHE:
-        return _TRI_ORIENTED_CACHE[key]
-    li = (
-        table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_partkey") % 5 == 0)
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    e = (
-        li.alias("x")
-        .join(li.alias("y"), (F.col("x.o") == F.col("y.o"))
-              & (F.col("x.p") < F.col("y.p")))
-        .select(F.col("x.p").alias("u"), F.col("y.p").alias("v"))
-        .distinct()
-        # eager checkpoint, not cache: e feeds the degree aggregate AND
-        # the rank joins, and a cached view re-inlines the basket
-        # self-join derive tree into every compiled reference (the
-        # repo-wide lineage-doubling rule); the checkpoint truncates it.
-        .localCheckpoint(eager=True)
-    )
-    # (degree, id) total order as one scalar rank; degree ≤ |V| keeps
-    # the composition collision-free at any realistic id width.
-    deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("d"))
-        .select(
-            "node",
-            (F.col("d").cast("long") * F.lit(1_000_000_000)
-             + F.col("node")).alias("rk"),
+    the same lifecycle pattern as _edge_index above."""
+
+    def build() -> DataFrame:
+        li = (
+            table(spark, sf_dir, "lineitem")
+            .filter(F.col("l_partkey") % 5 == 0)
+            .select(
+                F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
+            )
+            .distinct()
         )
-    )
-    ranked = (
-        e.join(deg.withColumnRenamed("node", "u")
-                  .withColumnRenamed("rk", "rk_u"), "u")
-        .join(deg.withColumnRenamed("node", "v")
-                 .withColumnRenamed("rk", "rk_v"), "v")
-    )
-    oriented = ranked.select(
-        F.when(F.col("rk_u") < F.col("rk_v"), F.col("u"))
-        .otherwise(F.col("v")).alias("src"),
-        F.when(F.col("rk_u") < F.col("rk_v"), F.col("v"))
-        .otherwise(F.col("u")).alias("dst"),
-        F.greatest("rk_u", "rk_v").alias("rk_dst"),
-    ).localCheckpoint(eager=True)
-    _TRI_ORIENTED_CACHE[key] = oriented
-    return oriented
+        e = (
+            li.alias("x")
+            .join(li.alias("y"), (F.col("x.o") == F.col("y.o"))
+                  & (F.col("x.p") < F.col("y.p")))
+            .select(F.col("x.p").alias("u"), F.col("y.p").alias("v"))
+            .distinct()
+            # eager checkpoint, not cache: e feeds the degree aggregate AND
+            # the rank joins, and a cached view re-inlines the basket
+            # self-join derive tree into every compiled reference (the
+            # repo-wide lineage-doubling rule); the checkpoint truncates it.
+            .localCheckpoint(eager=True)
+        )
+        # (degree, id) total order as one scalar rank; degree ≤ |V| keeps
+        # the composition collision-free at any realistic id width.
+        deg = (
+            e.select(F.col("u").alias("node"))
+            .unionAll(e.select(F.col("v").alias("node")))
+            .groupBy("node")
+            .agg(F.count("*").alias("d"))
+            .select(
+                "node",
+                (F.col("d").cast("long") * F.lit(1_000_000_000)
+                 + F.col("node")).alias("rk"),
+            )
+        )
+        ranked = (
+            e.join(deg.withColumnRenamed("node", "u")
+                      .withColumnRenamed("rk", "rk_u"), "u")
+            .join(deg.withColumnRenamed("node", "v")
+                     .withColumnRenamed("rk", "rk_v"), "v")
+        )
+        return ranked.select(
+            F.when(F.col("rk_u") < F.col("rk_v"), F.col("u"))
+            .otherwise(F.col("v")).alias("src"),
+            F.when(F.col("rk_u") < F.col("rk_v"), F.col("v"))
+            .otherwise(F.col("u")).alias("dst"),
+            F.greatest("rk_u", "rk_v").alias("rk_dst"),
+        ).localCheckpoint(eager=True)
+
+    return memo.get(spark, "tri_oriented", sf_dir, build)
 
 
 def release_tri_oriented(
@@ -915,15 +889,7 @@ def release_tri_oriented(
 ) -> None:
     """Evict the session's checkpointed oriented edge list and free
     its storage blocks."""
-    app_id = spark.sparkContext.applicationId
-    for key in [
-        k
-        for k in _TRI_ORIENTED_CACHE
-        if k[0] == app_id and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        frames = _TRI_ORIENTED_CACHE.pop(key)
-        for df in frames if isinstance(frames, tuple) else (frames,):
-            release_local_checkpoint(df)
+    memo.release(spark, "tri_oriented", sf_dir)
 
 
 @register(
@@ -1608,9 +1574,6 @@ def _ppr_oracle() -> str:
     """
 
 
-_PPR_RANKS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _ppr_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Final PPR fixed-point table (node, rank_fp) for the %200 seed
     set — the identical unrolled recursion graph_personalized_pagerank
@@ -1619,55 +1582,50 @@ def _ppr_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured ~2.9 s of the query as the unrolled-iteration job floor;
     sharing the ranks removes one whole PPR unroll per session — the
     shingle-index/CC-map lifecycle)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _PPR_RANKS_CACHE:
-        return _PPR_RANKS_CACHE[key]
-    edges, deg = _edge_index(spark, sf_dir)
-    teleport = F.when(F.col("src") % 200 == 0, F.lit((15 * PR_SCALE) // 100)) \
-        .otherwise(F.lit(0))
-    ranks = deg.select(
-        F.col("src").alias("node"),
-        (
-            F.when(F.col("src") % 200 == 0, F.lit(PR_SCALE)).otherwise(0)
-        ).cast("long").alias("rank_fp"),
-    )
-    for _ in range(PR_ITERS):
-        contribs = (
-            # rank_fp > 0 prunes the frontier: early PPR rounds touch
-            # only the seed neighborhood, exactly how a local-walk
-            # engine bounds work (and a no-op for correctness — zero
-            # mass contributes zero).
-            edges.join(
-                F.broadcast(ranks.filter(F.col("rank_fp") > 0)),
-                edges["src"] == F.col("node"),
-            )
-            .join(F.broadcast(deg), "src")
-            .select("dst", F.expr("rank_fp div d").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = deg.join(
-            contribs, deg["src"] == contribs["dst"], "left"
-        ).select(
+
+    def build() -> DataFrame:
+        edges, deg = _edge_index(spark, sf_dir)
+        teleport = F.when(
+            F.col("src") % 200 == 0, F.lit((15 * PR_SCALE) // 100)
+        ).otherwise(F.lit(0))
+        ranks = deg.select(
             F.col("src").alias("node"),
             (
-                teleport + F.expr("85 * coalesce(contrib, 0) div 100")
+                F.when(F.col("src") % 200 == 0, F.lit(PR_SCALE)).otherwise(0)
             ).cast("long").alias("rank_fp"),
         )
-    ranks = ranks.localCheckpoint(eager=True)
-    _PPR_RANKS_CACHE[key] = ranks
-    return ranks
+        for _ in range(PR_ITERS):
+            contribs = (
+                # rank_fp > 0 prunes the frontier: early PPR rounds touch
+                # only the seed neighborhood, exactly how a local-walk
+                # engine bounds work (and a no-op for correctness — zero
+                # mass contributes zero).
+                edges.join(
+                    F.broadcast(ranks.filter(F.col("rank_fp") > 0)),
+                    edges["src"] == F.col("node"),
+                )
+                .join(F.broadcast(deg), "src")
+                .select("dst", F.expr("rank_fp div d").alias("c"))
+                .groupBy("dst")
+                .agg(F.sum("c").alias("contrib"))
+            )
+            ranks = deg.join(
+                contribs, deg["src"] == contribs["dst"], "left"
+            ).select(
+                F.col("src").alias("node"),
+                (
+                    teleport + F.expr("85 * coalesce(contrib, 0) div 100")
+                ).cast("long").alias("rank_fp"),
+            )
+        return ranks.localCheckpoint(eager=True)
+
+    return memo.get(spark, "ppr_ranks", sf_dir, build)
 
 
 def release_ppr_ranks(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Evict the session's checkpointed PPR rank table."""
-    app_id = spark.sparkContext.applicationId
-    for key in [
-        k
-        for k in _PPR_RANKS_CACHE
-        if k[0] == app_id and (sf_dir is None or k[1] == sf_dir)
-    ]:
-        _PPR_RANKS_CACHE.pop(key)
+    """Evict the session's checkpointed PPR rank table and free its
+    storage blocks."""
+    memo.release(spark, "ppr_ranks", sf_dir)
 
 
 @register("graph_personalized_pagerank", oracle=_ppr_oracle())

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluent_bit_filter_math_spark import memo
 from fluent_bit_filter_math_spark.pipeline import apply_specs
 from fluent_bit_filter_math_spark.registry import register
 from fluent_bit_filter_math_spark.sources import table
@@ -479,9 +480,6 @@ def pysink_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # their own manifest atomically (retry-idempotence pinned in
 # tests/test_round10.py).
 # ---------------------------------------------------------------------------
-_PYSINK_SPLITS: dict[str, str] = {}
-
-
 def _pysink_split_src(spark: SparkSession, sf_dir: str) -> str:
     """Two event_id-parity replay files of the folded columns,
     memoized per sf_dir (data prep, not the operator under test)."""
@@ -492,35 +490,33 @@ def _pysink_split_src(spark: SparkSession, sf_dir: str) -> str:
     from fluent_bit_filter_math_spark.functions import exact_cents
     from fluent_bit_filter_math_spark.scratch import dir_key, scratch_dir
 
-    key = os.path.abspath(sf_dir)
-    cached = _PYSINK_SPLITS.get(key)
-    if cached is not None and _glob.glob(cached + "/part-*.parquet"):
-        return cached
-    base = scratch_dir(f"pysink-split-{dir_key(sf_dir)}")
-    src = os.path.join(base, "src")
-    ev = _events(spark, sf_dir).filter(F.col("event_id") % 10 == 5).select(
-        "event_id",
-        "user_id",
-        exact_cents(F.col("value")).alias("cents"),
-        (exact_cents(F.col("value")) + F.col("user_id")).alias("fold_sum"),
-    )
-    ev.filter(F.col("event_id") % 20 == 5).coalesce(1).write.parquet(
-        os.path.join(src, "f0")
-    )
-    ev.filter(F.col("event_id") % 20 == 15).coalesce(1).write.parquet(
-        os.path.join(src, "f1")
-    )
-    now = time.time()
-    files = sorted(_glob.glob(src + "/f*/part-*.parquet"))
-    if len(files) != 2:
-        raise RuntimeError(
-            f"two-file replay contract violated: {len(files)} data files"
+    def build() -> str:
+        base = scratch_dir(f"pysink-split-{dir_key(sf_dir)}")
+        src = os.path.join(base, "src")
+        ev = _events(spark, sf_dir).filter(F.col("event_id") % 10 == 5).select(
+            "event_id",
+            "user_id",
+            exact_cents(F.col("value")).alias("cents"),
+            (exact_cents(F.col("value")) + F.col("user_id")).alias("fold_sum"),
         )
-    for i, f in enumerate(files):
-        os.utime(f, (now + i, now + i))
-    src = src + "/f*"
-    _PYSINK_SPLITS[key] = src
-    return src
+        ev.filter(F.col("event_id") % 20 == 5).coalesce(1).write.parquet(
+            os.path.join(src, "f0")
+        )
+        ev.filter(F.col("event_id") % 20 == 15).coalesce(1).write.parquet(
+            os.path.join(src, "f1")
+        )
+        now = time.time()
+        files = sorted(_glob.glob(src + "/f*/part-*.parquet"))
+        if len(files) != 2:
+            raise RuntimeError(
+                f"two-file replay contract violated: {len(files)} data files"
+            )
+        for i, f in enumerate(files):
+            os.utime(f, (now + i, now + i))
+        return src
+
+    src = memo.get(spark, "pysink_split", sf_dir, build)
+    return src + "/f*"  # glob path covering every slice dir
 
 
 @register(

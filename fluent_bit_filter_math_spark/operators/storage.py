@@ -27,24 +27,20 @@ value-invisible.
 
 from __future__ import annotations
 
-import atexit
 import os
-import shutil
-import tempfile
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluent_bit_filter_math_spark import memo
 from fluent_bit_filter_math_spark.registry import register
+from fluent_bit_filter_math_spark.scratch import dir_key
 from fluent_bit_filter_math_spark.sources import table
 from fluent_bit_filter_math_spark.sources.warehouse import (
     bucketed_table,
     write_bucketed,
 )
-
-# (applicationId, sf_dir) → partitioned-parquet path / "bucketed written"
-_PARTITIONED_DIRS: dict[tuple[str, str], str] = {}
-_BUCKETED_READY: set[tuple[str, str]] = set()
 
 _N_BUCKETS = 16
 
@@ -52,18 +48,18 @@ _N_BUCKETS = 16
 def partitioned_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Events re-laid-out as parquet partitioned by event_type, written
     once per (session, fixture)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PARTITIONED_DIRS:
-        out = tempfile.mkdtemp(prefix="fbm-part-events-")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+
+    def build() -> str:
+        out = memo.private_dir("part-events")
         (
             table(spark, sf_dir, "events")
             .write.mode("overwrite")
             .partitionBy("event_type")
             .parquet(out)
         )
-        _PARTITIONED_DIRS[key] = out
-    return _PARTITIONED_DIRS[key]
+        return out
+
+    return memo.get(spark, "partitioned_events", sf_dir, build)
 
 
 # ---------------------------------------------------------------------------
@@ -97,13 +93,19 @@ def io_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sum engine-exact (the q1 idiom).
 # ---------------------------------------------------------------------------
 def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BUCKETED_READY:
+    def build() -> tuple[DataFrame, DataFrame]:
+        # Names carry the fixture's dir key, so one sf_dir's write never
+        # replaces the tables another sf_dir's entry reads.
+        suffix = re.sub(r"\W", "_", dir_key(sf_dir))
+        orders, lineitem = (
+            f"fbm_orders_bucketed_{suffix}",
+            f"fbm_lineitem_bucketed_{suffix}",
+        )
         write_bucketed(
             table(spark, sf_dir, "orders").select(
                 "o_orderkey", "o_orderpriority"
             ),
-            "fbm_orders_bucketed",
+            orders,
             ["o_orderkey"],
             _N_BUCKETS,
             sort_cols=["o_orderkey"],
@@ -112,16 +114,14 @@ def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
             table(spark, sf_dir, "lineitem").select(
                 "l_orderkey", "l_extendedprice", "l_discount"
             ),
-            "fbm_lineitem_bucketed",
+            lineitem,
             ["l_orderkey"],
             _N_BUCKETS,
             sort_cols=["l_orderkey"],
         )
-        _BUCKETED_READY.add(key)
-    return (
-        bucketed_table(spark, "fbm_orders_bucketed"),
-        bucketed_table(spark, "fbm_lineitem_bucketed"),
-    )
+        return bucketed_table(spark, orders), bucketed_table(spark, lineitem)
+
+    return memo.get(spark, "bucketed_pair", sf_dir, build)
 
 
 @register(
@@ -236,14 +236,9 @@ def merge_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # row-tag-splittable but verbose interchange format, the 100 TB corpus
 # itself stays parquet (see the pruning/bucketing queries above).
 # ---------------------------------------------------------------------------
-_XML_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _xml_events_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _XML_DIRS:
-        out = tempfile.mkdtemp(prefix="fbm-xml-events-")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+    def build() -> str:
+        out = memo.private_dir("xml-events")
         (
             table(spark, sf_dir, "events")
             .filter(F.col("event_id") % 20 == 0)
@@ -265,8 +260,9 @@ def _xml_events_path(spark: SparkSession, sf_dir: str) -> str:
             .mode("overwrite")
             .save(out)
         )
-        _XML_DIRS[key] = out
-    return _XML_DIRS[key]
+        return out
+
+    return memo.get(spark, "xml_events", sf_dir, build)
 
 
 @register(
@@ -376,23 +372,9 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query. Column pruning and filter pushdown still reach both file
 # generations.
 # ---------------------------------------------------------------------------
-_EVOLVE_DIRS: dict = {}
-
-
 def _evolving_events_path(spark: SparkSession, sf_dir: str) -> str:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    key = sf_dir
-    if key not in _EVOLVE_DIRS:
-        out = os.path.join(
-            tempfile.gettempdir(),
-            f"fbm-evolve-{os.getpid()}-{abs(hash(key)) % 10**8}",
-        )
-        shutil.rmtree(out, ignore_errors=True)
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+    def build() -> str:
+        out = memo.private_dir("evolve")
         ev = table(spark, sf_dir, "events")
         cents = (
             F.floor(F.col("value") * 100 + F.lit(0.5))
@@ -414,8 +396,9 @@ def _evolving_events_path(spark: SparkSession, sf_dir: str) -> str:
             .coalesce(1)
             .write.parquet(out, mode="append")
         )
-        _EVOLVE_DIRS[key] = out
-    return _EVOLVE_DIRS[key]
+        return out
+
+    return memo.get(spark, "evolving_events", sf_dir, build)
 
 
 @register(
@@ -490,16 +473,14 @@ def _znorm(col: F.Column, lo: F.Column, hi: F.Column) -> F.Column:
     ).cast("long")
 
 
-_ZORDER_DIRS: dict[tuple[str, str], str] = {}
 _Z_FILES = 16
 
 
 def zordered_events_path(spark: SparkSession, sf_dir: str) -> str:
     """Events rewritten in z-order on (user_id, event hour index)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ZORDER_DIRS:
-        out = tempfile.mkdtemp(prefix="fbm-zorder-events-")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+
+    def build() -> str:
+        out = memo.private_dir("zorder-events")
         ev = table(spark, sf_dir, "events")
         hour_idx = F.floor(
             F.unix_micros(F.col("ts").cast("timestamp")) / F.lit(3600000000)
@@ -527,8 +508,9 @@ def zordered_events_path(spark: SparkSession, sf_dir: str) -> str:
             .write.mode("overwrite")
             .parquet(out)
         )
-        _ZORDER_DIRS[key] = out
-    return _ZORDER_DIRS[key]
+        return out
+
+    return memo.get(spark, "zordered_events", sf_dir, build)
 
 
 @register(
@@ -567,19 +549,14 @@ def layout_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 # compaction must be value-invisible. The 64→≤4 file-count drop is
 # pinned in tests/test_plans.py.
 # ---------------------------------------------------------------------------
-_COMPACT_DIRS: dict[tuple[str, str], tuple[str, str]] = {}
-
-
 def compacted_lineitem_paths(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str]:
     """(fragmented_dir, compacted_dir) for the lineitem subset."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _COMPACT_DIRS:
-        frag = tempfile.mkdtemp(prefix="fbm-frag-lineitem-")
-        comp = tempfile.mkdtemp(prefix="fbm-compact-lineitem-")
-        atexit.register(shutil.rmtree, frag, ignore_errors=True)
-        atexit.register(shutil.rmtree, comp, ignore_errors=True)
+
+    def build() -> tuple[str, str]:
+        frag = memo.private_dir("frag-lineitem")
+        comp = memo.private_dir("compact-lineitem")
         sub = (
             table(spark, sf_dir, "lineitem")
             .filter(F.col("l_orderkey") % 3 == 0)
@@ -593,8 +570,9 @@ def compacted_lineitem_paths(
         spark.read.parquet(frag).coalesce(4).write.mode("overwrite").parquet(
             comp
         )
-        _COMPACT_DIRS[key] = (frag, comp)
-    return _COMPACT_DIRS[key]
+        return (frag, comp)
+
+    return memo.get(spark, "compacted_lineitem", sf_dir, build)
 
 
 @register(
@@ -633,23 +611,18 @@ def storage_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RecordBatches crossing the boundary vectorized). The oracle reads
 # the ORIGINAL fixture: the format round-trip must be value-invisible.
 # ---------------------------------------------------------------------------
-_ARROW_DIRS: dict[tuple[str, str], str] = {}
-
-
 def arrow_ipc_events_path(spark: SparkSession, sf_dir: str) -> str:
     from fluent_bit_filter_math_spark.sources.arrow_ipc import (
         ArrowIPCDataSource,
         write_arrow_ipc,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ARROW_DIRS:
+    def build() -> str:
         try:
             spark.dataSource.register(ArrowIPCDataSource)
         except Exception:
             pass  # already registered in this session
-        out = tempfile.mkdtemp(prefix="fbm-arrow-events-")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+        out = memo.private_dir("arrow-events")
         sub = (
             table(spark, sf_dir, "events")
             .filter(F.col("event_id") % 2 == 0)
@@ -657,8 +630,9 @@ def arrow_ipc_events_path(spark: SparkSession, sf_dir: str) -> str:
             .repartition(8, "event_id")
         )
         write_arrow_ipc(sub, out)
-        _ARROW_DIRS[key] = out
-    return _ARROW_DIRS[key]
+        return out
+
+    return memo.get(spark, "arrow_events", sf_dir, build)
 
 
 @register(
@@ -696,14 +670,9 @@ def io_arrow_ipc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (df.write.text, one shard per partition). The oracle rebuilds both
 # populations from the injection rule.
 # ---------------------------------------------------------------------------
-_CSV_DIRS: dict[tuple[str, str], str] = {}
-
-
 def malformed_csv_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CSV_DIRS:
-        out = tempfile.mkdtemp(prefix="fbm-csv-events-")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+    def build() -> str:
+        out = memo.private_dir("csv-events")
         ev = table(spark, sf_dir, "events").filter(F.col("event_id") % 3 == 0)
         line = F.when(
             F.col("event_id") % 97 == 0,
@@ -744,8 +713,9 @@ def malformed_csv_path(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         ev.select(line.alias("value")).write.mode("overwrite").text(out)
-        _CSV_DIRS[key] = out
-    return _CSV_DIRS[key]
+        return out
+
+    return memo.get(spark, "malformed_csv", sf_dir, build)
 
 
 @register(
@@ -827,14 +797,10 @@ def io_csv_malformed_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQC_SHARDS = 16  # event_id % 16 residue classes, one shard each
 _PQC_BAD = (3, 11)  # residue classes whose shards get corrupted
 
-_PQC_DIRS: dict[tuple[str, str], str] = {}
-
 
 def corrupt_parquet_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _PQC_DIRS:
-        base = tempfile.mkdtemp(prefix="fbm-pq-corrupt-")
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
+    def build() -> str:
+        base = memo.private_dir("pq-corrupt")
         out = os.path.join(base, "data")
         ev = table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value",
@@ -851,8 +817,9 @@ def corrupt_parquet_path(spark: SparkSession, sf_dir: str) -> str:
                     # the last 8 bytes; zeroing the final 64 kills both
                     fh.seek(max(0, size - 64))
                     fh.write(b"\x00" * min(64, size))
-        _PQC_DIRS[key] = out
-    return _PQC_DIRS[key]
+        return out
+
+    return memo.get(spark, "corrupt_parquet", sf_dir, build)
 
 
 @register(
@@ -909,14 +876,9 @@ def io_parquet_corrupt_quarantine(
 # the plan audit records the PushedFilters entry. Cents idiom as XML:
 # integers round-trip any container exactly.
 # ---------------------------------------------------------------------------
-_ORC_DIRS: dict[tuple[str, str], str] = {}
-
-
 def _orc_events_path(spark: SparkSession, sf_dir: str) -> str:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ORC_DIRS:
-        out = tempfile.mkdtemp(prefix="fbm-orc-events-")
-        atexit.register(shutil.rmtree, out, ignore_errors=True)
+    def build() -> str:
+        out = memo.private_dir("orc-events")
         (
             table(spark, sf_dir, "events")
             .filter(F.col("event_id") % 10 == 0)
@@ -933,8 +895,9 @@ def _orc_events_path(spark: SparkSession, sf_dir: str) -> str:
             .mode("overwrite")
             .save(out)
         )
-        _ORC_DIRS[key] = out
-    return _ORC_DIRS[key]
+        return out
+
+    return memo.get(spark, "orc_events", sf_dir, build)
 
 
 @register(

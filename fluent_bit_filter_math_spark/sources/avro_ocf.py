@@ -586,10 +586,6 @@ def resolve_schemas(
     return steps, template
 
 
-def _branches(typ) -> list:
-    return typ if isinstance(typ, list) else [typ]
-
-
 def _array_decoder(item_dec):
     """Block-form array reader (count varint per block — negative
     count means a block byte-size follows, a skip hint this reader

@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluent_bit_filter_math_spark import memo
+
 TABLES = (
     "region",
     "nation",
@@ -39,25 +41,21 @@ BROADCAST_TABLES = frozenset({"region", "nation"})
 # oracle) coerces timestamp_ns to its native µs timestamps.
 _NANOS_TS_TABLES = {"events": ("ts",)}
 
-# Per-path cache of the reader's INFERRED schema (metadata only, never
-# data): the fixtures are deterministic read-only parquet, so the first
-# read's footer inference fully determines every later read's schema —
-# re-inferring runs one driver-side footer job per `table()` call
-# (measured ~150 ms vs ~40 ms with an explicit schema; a bench rep
-# issues hundreds of reads). This is the fixture-catalog twin of the
-# commit-log snapshot-schema read (guide §6 — Delta/Iceberg readers
-# never infer, the metadata layer already knows). Keyed per process;
-# repopulated on first use after any restart, so nothing persists.
-_SCHEMA_CACHE: dict[str, object] = {}
-
-
-def _read_cached_schema(spark: SparkSession, path: str) -> DataFrame:
-    cached = _SCHEMA_CACHE.get(path)
-    if cached is not None:
-        return spark.read.schema(cached).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMA_CACHE[path] = df.schema
-    return df
+# The reader's INFERRED schema is memoized per (context, fixture, table)
+# (metadata only, never data): the fixtures are deterministic read-only
+# parquet, so the first read's footer inference fully determines every
+# later read's schema — re-inferring runs one driver-side footer job
+# per `table()` call (measured ~150 ms vs ~40 ms with an explicit
+# schema; a bench rep issues hundreds of reads). This is the
+# fixture-catalog twin of the commit-log snapshot-schema read (guide
+# §6 — Delta/Iceberg readers never infer, the metadata layer already
+# knows).
+def _read_cached_schema(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    schema = memo.get(
+        spark, "schema", sf_dir, lambda: spark.read.parquet(path).schema, name
+    )
+    return spark.read.schema(schema).parquet(path)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -68,17 +66,16 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # TZ-naive. Pin UTC here so results are driver-session-independent
     # (the verification driver owns its own SparkSession).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, f"{name}.parquet")
     if name in _NANOS_TS_TABLES:
         # Runtime-settable SQL conf; only affects NANOS columns, so leaving
         # it on is harmless for the µs timestamps in the other tables.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = _read_cached_schema(spark, path)
+        df = _read_cached_schema(spark, sf_dir, name)
         for c in _NANOS_TS_TABLES[name]:
             if dict(df.dtypes).get(c) == "bigint":
                 df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
         return df
-    return _read_cached_schema(spark, path)
+    return _read_cached_schema(spark, sf_dir, name)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -42,6 +42,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from fluent_bit_filter_math_spark import memo
 from fluent_bit_filter_math_spark.registry import register
 
 _LOG_DIR = "_log"
@@ -5273,10 +5274,6 @@ def stream_table_format_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# sf_dir -> memoized bronze table path (immutable fixture history)
-_CDF_MERGE_BRONZE: dict[str, str] = {}
-
-
 @register(
     "stream_cdf_apply_merge",
     oracle="""
@@ -5326,9 +5323,7 @@ def stream_cdf_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # warm cost); silver + the stream checkpoint rotate per invocation
     from fluent_bit_filter_math_spark.scratch import dir_key
 
-    bkey = os.path.abspath(sf_dir)
-    bronze = _CDF_MERGE_BRONZE.get(bkey)
-    if bronze is None or latest_version(bronze) != 3:
+    def build_bronze() -> str:
         bbase = scratch_dir(f"tf-cdf-merge-bronze-{dir_key(sf_dir)}")
         bronze = os.path.join(bbase, "bronze")
         mx = int(ev.agg(F.max("event_id")).collect()[0][0])
@@ -5336,7 +5331,12 @@ def stream_cdf_apply_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         tf_append(ev.filter(F.col("event_id") % 3 == 1), bronze)
         tf_delete(spark, bronze, [("event_id", ">", (3 * mx) // 4)])
         tf_append(ev.filter(F.col("event_id") % 3 == 2), bronze)
-        _CDF_MERGE_BRONZE[bkey] = bronze
+        return bronze
+
+    bronze = memo.get(
+        spark, "cdf_merge_bronze", sf_dir, build_bronze,
+        valid=lambda b: latest_version(b) == 3,
+    )
 
     base = scratch_dir("tf-cdf-merge")
     silver = os.path.join(base, "silver")

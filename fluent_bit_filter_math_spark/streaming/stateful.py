@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from fluent_bit_filter_math_spark import memo
 from fluent_bit_filter_math_spark.pipeline import (
     read_events_stream,
     run_stream_to_memory,
@@ -544,11 +545,8 @@ _TWS_IDLE_OUT = (
 )
 
 
-_IDLE_SPLITS: dict[tuple[str, float], str] = {}
-
-
 def _idle_split_src(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per process per (sf_dir, split-frac)) the two
+    """Build (once per Spark context per (sf_dir, split-frac)) the two
     event-time-ranged replay files and return their glob path.
 
     Memoized like storage.py's prepared-layout dirs: the split is DATA
@@ -561,53 +559,51 @@ def _idle_split_src(spark: SparkSession, sf_dir: str) -> str:
     import os
     import time
 
-    from fluent_bit_filter_math_spark.scratch import scratch_dir
+    from fluent_bit_filter_math_spark.scratch import dir_key, scratch_dir
     from fluent_bit_filter_math_spark.sources import table
 
-    key = (os.path.abspath(sf_dir), float(_TWS_IDLE_SPLIT_FRAC))
-    cached = _IDLE_SPLITS.get(key)
-    if cached is not None and glob.glob(cached + "/part-*.parquet"):
-        return cached
-    from fluent_bit_filter_math_spark.scratch import dir_key
+    frac = float(_TWS_IDLE_SPLIT_FRAC)
 
-    base = scratch_dir(f"tws-idle-{key[1]:g}-{dir_key(sf_dir)}")
-    src = os.path.join(base, "src")
-    ev = table(spark, sf_dir, "events").select(
-        "user_id",
-        F.col("ts").cast("timestamp").alias("ts"),
-        exact_cents(F.col("value")).alias("cents"),
-    )
-    # Exactly two event-time-ranged files, split at an exact
-    # percentile of event time (deterministic; the contract above is
-    # only a closed form for a 2-file replay). mtimes force
-    # oldest-range-first replay (FileStreamSource orders by
-    # modification time).
-    us = F.unix_micros(F.col("ts"))
-    boundary = int(
-        ev.select(
-            F.expr(
-                f"percentile(unix_micros(ts), {_TWS_IDLE_SPLIT_FRAC})"
-            ).alias("q")
-        ).collect()[0]["q"]
-    )
-    ev.filter(us <= boundary).coalesce(1).write.parquet(
-        os.path.join(src, "f0")
-    )
-    ev.filter(us > boundary).coalesce(1).write.parquet(
-        os.path.join(src, "f1")
-    )
-    now = time.time()
-    files = sorted(glob.glob(src + "/f*/part-*.parquet"))
-    if len(files) != 2:  # not assert: must hold under python -O too
-        raise RuntimeError(
-            f"two-file replay contract violated: {len(files)} data files"
-            " — degenerate percentile split or multi-part write"
+    def build() -> str:
+        base = scratch_dir(f"tws-idle-{frac:g}-{dir_key(sf_dir)}")
+        src = os.path.join(base, "src")
+        ev = table(spark, sf_dir, "events").select(
+            "user_id",
+            F.col("ts").cast("timestamp").alias("ts"),
+            exact_cents(F.col("value")).alias("cents"),
         )
-    for i, f in enumerate(files):
-        os.utime(f, (now + i, now + i))
-    src = src + "/f*"  # glob path covering both slice dirs
-    _IDLE_SPLITS[key] = src
-    return src
+        # Exactly two event-time-ranged files, split at an exact
+        # percentile of event time (deterministic; the contract above is
+        # only a closed form for a 2-file replay). mtimes force
+        # oldest-range-first replay (FileStreamSource orders by
+        # modification time).
+        us = F.unix_micros(F.col("ts"))
+        boundary = int(
+            ev.select(
+                F.expr(
+                    f"percentile(unix_micros(ts), {_TWS_IDLE_SPLIT_FRAC})"
+                ).alias("q")
+            ).collect()[0]["q"]
+        )
+        ev.filter(us <= boundary).coalesce(1).write.parquet(
+            os.path.join(src, "f0")
+        )
+        ev.filter(us > boundary).coalesce(1).write.parquet(
+            os.path.join(src, "f1")
+        )
+        now = time.time()
+        files = sorted(glob.glob(src + "/f*/part-*.parquet"))
+        if len(files) != 2:  # not assert: must hold under python -O too
+            raise RuntimeError(
+                f"two-file replay contract violated: {len(files)} data files"
+                " — degenerate percentile split or multi-part write"
+            )
+        for i, f in enumerate(files):
+            os.utime(f, (now + i, now + i))
+        return src
+
+    src = memo.get(spark, "idle_split", sf_dir, build, frac)
+    return src + "/f*"  # glob path covering every slice dir
 
 
 @register(
@@ -776,8 +772,6 @@ _TWS_KMV_OUT = (
     " exact_style_estimate long"
 )
 
-_KMV_SPLITS: dict[str, str] = {}
-
 
 def _kmv_split_src(spark: SparkSession, sf_dir: str) -> str:
     """Two event_id-parity replay files (event_type, 56-bit user hash),
@@ -786,43 +780,39 @@ def _kmv_split_src(spark: SparkSession, sf_dir: str) -> str:
     import os
     import time
 
-    from fluent_bit_filter_math_spark.scratch import scratch_dir
+    from fluent_bit_filter_math_spark.scratch import dir_key, scratch_dir
 
-    key = os.path.abspath(sf_dir)
-    cached = _KMV_SPLITS.get(key)
-    if cached is not None and glob.glob(cached + "/part-*.parquet"):
-        return cached
-    from fluent_bit_filter_math_spark.scratch import dir_key
+    def build() -> str:
+        base = scratch_dir(f"tws-kmv-{dir_key(sf_dir)}")
+        src = os.path.join(base, "src")
+        from fluent_bit_filter_math_spark.sources import table
 
-    base = scratch_dir(f"tws-kmv-{dir_key(sf_dir)}")
-    src = os.path.join(base, "src")
-    from fluent_bit_filter_math_spark.sources import table
-
-    ev = table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 14),
-            16, 10,
-        ).cast("long").alias("hv"),
-    )
-    ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        os.path.join(src, "f0")
-    )
-    ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        os.path.join(src, "f1")
-    )
-    now = time.time()
-    files = sorted(glob.glob(src + "/f*/part-*.parquet"))
-    if len(files) != 2:
-        raise RuntimeError(
-            f"two-file replay contract violated: {len(files)} data files"
+        ev = table(spark, sf_dir, "events").select(
+            "event_id",
+            "event_type",
+            F.conv(
+                F.substring(F.md5(F.col("user_id").cast("string")), 1, 14),
+                16, 10,
+            ).cast("long").alias("hv"),
         )
-    for i, f in enumerate(files):
-        os.utime(f, (now + i, now + i))
-    src = src + "/f*"
-    _KMV_SPLITS[key] = src
-    return src
+        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
+            os.path.join(src, "f0")
+        )
+        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
+            os.path.join(src, "f1")
+        )
+        now = time.time()
+        files = sorted(glob.glob(src + "/f*/part-*.parquet"))
+        if len(files) != 2:
+            raise RuntimeError(
+                f"two-file replay contract violated: {len(files)} data files"
+            )
+        for i, f in enumerate(files):
+            os.utime(f, (now + i, now + i))
+        return src
+
+    src = memo.get(spark, "kmv_split", sf_dir, build)
+    return src + "/f*"  # glob path covering every slice dir
 
 
 @register(
@@ -917,8 +907,6 @@ _TWS_PRI_OUT = (
     "event_type string, batch_seq long, n_kept long, est_total_fp long"
 )
 
-_PRI_SPLITS: dict[str, str] = {}
-
 
 def _pri_split_src(spark: SparkSession, sf_dir: str) -> str:
     """Two event_id-parity replay files of (event_type, skey, event_id,
@@ -928,54 +916,50 @@ def _pri_split_src(spark: SparkSession, sf_dir: str) -> str:
     import os
     import time
 
-    from fluent_bit_filter_math_spark.scratch import scratch_dir
+    from fluent_bit_filter_math_spark.scratch import dir_key, scratch_dir
 
-    key = os.path.abspath(sf_dir)
-    cached = _PRI_SPLITS.get(key)
-    if cached is not None and glob.glob(cached + "/part-*.parquet"):
-        return cached
-    from fluent_bit_filter_math_spark.scratch import dir_key
+    def build() -> str:
+        base = scratch_dir(f"tws-pri-{dir_key(sf_dir)}")
+        src = os.path.join(base, "src")
+        from fluent_bit_filter_math_spark.sources import table
 
-    base = scratch_dir(f"tws-pri-{dir_key(sf_dir)}")
-    src = os.path.join(base, "src")
-    from fluent_bit_filter_math_spark.sources import table
-
-    ev = table(spark, sf_dir, "events")
-    base_df = ev.select(
-        "event_id",
-        "event_type",
-        F.greatest(
-            F.lit(1).cast("long"),
-            F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long")
-            + F.lit(1),
-        ).alias("w"),
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
-            16, 10,
-        ).cast("long").alias("hv"),
-    ).select(
-        "event_id",
-        "event_type",
-        "w",
-        (F.col("hv").cast("double") / F.col("w")).alias("skey"),
-    )
-    base_df.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-        os.path.join(src, "f0")
-    )
-    base_df.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-        os.path.join(src, "f1")
-    )
-    now = time.time()
-    files = sorted(glob.glob(src + "/f*/part-*.parquet"))
-    if len(files) != 2:
-        raise RuntimeError(
-            f"two-file replay contract violated: {len(files)} data files"
+        ev = table(spark, sf_dir, "events")
+        base_df = ev.select(
+            "event_id",
+            "event_type",
+            F.greatest(
+                F.lit(1).cast("long"),
+                F.floor(F.col("value") * 100.0 + F.lit(0.5)).cast("long")
+                + F.lit(1),
+            ).alias("w"),
+            F.conv(
+                F.substring(F.md5(F.col("event_id").cast("string")), 1, 15),
+                16, 10,
+            ).cast("long").alias("hv"),
+        ).select(
+            "event_id",
+            "event_type",
+            "w",
+            (F.col("hv").cast("double") / F.col("w")).alias("skey"),
         )
-    for i, f in enumerate(files):
-        os.utime(f, (now + i, now + i))
-    src = src + "/f*"
-    _PRI_SPLITS[key] = src
-    return src
+        base_df.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
+            os.path.join(src, "f0")
+        )
+        base_df.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
+            os.path.join(src, "f1")
+        )
+        now = time.time()
+        files = sorted(glob.glob(src + "/f*/part-*.parquet"))
+        if len(files) != 2:
+            raise RuntimeError(
+                f"two-file replay contract violated: {len(files)} data files"
+            )
+        for i, f in enumerate(files):
+            os.utime(f, (now + i, now + i))
+        return src
+
+    src = memo.get(spark, "pri_split", sf_dir, build)
+    return src + "/f*"  # glob path covering every slice dir
 
 
 @register(
@@ -1069,11 +1053,10 @@ def stream_tws_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # emitted sketch ⇒ the wire shim, the RocksDB provider, the
 # availableNow replay AND the snapshot format all agree end to end.
 #
-# The checkpoint lives in a memoized scratch dir (the split-builder
-# discipline): each invocation replays the bounded stream fresh into
-# a clean checkpoint, then reads the store it wrote.
+# The checkpoint lives in a rotating scratch dir: each invocation
+# replays the bounded stream fresh into a clean checkpoint, then reads
+# the store it wrote.
 # ---------------------------------------------------------------------------
-_INSPECT_CKPTS: dict[str, str] = {}
 
 
 @register(

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fluent_bit_filter_math_spark import memo
 from fluent_bit_filter_math_spark.functions import exact_cents
 from fluent_bit_filter_math_spark.registry import register
 from fluent_bit_filter_math_spark.sources import table
@@ -831,8 +832,6 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LATE_STRAG_MOD = 10  # event_id % MOD == 0 of the old half → straggler file
 _LATE_DELAY_MS = 600_000
 
-_LATE_SPLITS: dict[str, str] = {}
-
 
 def _late_split_src(spark: SparkSession, sf_dir: str) -> str:
     """Three-file replay: f0 = in-order old half (minus stragglers),
@@ -842,44 +841,40 @@ def _late_split_src(spark: SparkSession, sf_dir: str) -> str:
     import os
     import time
 
-    from fluent_bit_filter_math_spark.scratch import scratch_dir
+    from fluent_bit_filter_math_spark.scratch import dir_key, scratch_dir
 
-    key = os.path.abspath(sf_dir)
-    cached = _LATE_SPLITS.get(key)
-    if cached is not None and glob.glob(cached + "/part-*.parquet"):
-        return cached
-    from fluent_bit_filter_math_spark.scratch import dir_key
-
-    base = scratch_dir(f"late-audit-{dir_key(sf_dir)}")
-    src = os.path.join(base, "src")
-    ev = table(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
-    )
-    us = F.unix_micros("ts")
-    boundary = float(
-        ev.select(
-            F.expr("percentile(unix_micros(ts), 0.5)").alias("q")
-        ).collect()[0]["q"]
-    )
-    strag = (us <= boundary) & (F.col("event_id") % _LATE_STRAG_MOD == 0)
-    ev.filter((us <= boundary) & ~strag).coalesce(1).write.parquet(
-        os.path.join(src, "f0")
-    )
-    ev.filter(us > boundary).coalesce(1).write.parquet(
-        os.path.join(src, "f1")
-    )
-    ev.filter(strag).coalesce(1).write.parquet(os.path.join(src, "f2"))
-    now = time.time()
-    files = sorted(glob.glob(src + "/f*/part-*.parquet"))
-    if len(files) != 3:  # single-shard writes are load-bearing (above)
-        raise RuntimeError(
-            f"three-file replay contract violated: {len(files)} data files"
+    def build() -> str:
+        base = scratch_dir(f"late-audit-{dir_key(sf_dir)}")
+        src = os.path.join(base, "src")
+        ev = table(spark, sf_dir, "events").select(
+            "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
         )
-    for i, f in enumerate(files):
-        os.utime(f, (now + i, now + i))
-    src = src + "/f*"
-    _LATE_SPLITS[key] = src
-    return src
+        us = F.unix_micros("ts")
+        boundary = float(
+            ev.select(
+                F.expr("percentile(unix_micros(ts), 0.5)").alias("q")
+            ).collect()[0]["q"]
+        )
+        strag = (us <= boundary) & (F.col("event_id") % _LATE_STRAG_MOD == 0)
+        ev.filter((us <= boundary) & ~strag).coalesce(1).write.parquet(
+            os.path.join(src, "f0")
+        )
+        ev.filter(us > boundary).coalesce(1).write.parquet(
+            os.path.join(src, "f1")
+        )
+        ev.filter(strag).coalesce(1).write.parquet(os.path.join(src, "f2"))
+        now = time.time()
+        files = sorted(glob.glob(src + "/f*/part-*.parquet"))
+        if len(files) != 3:  # single-shard writes are load-bearing (above)
+            raise RuntimeError(
+                f"three-file replay contract violated: {len(files)} data files"
+            )
+        for i, f in enumerate(files):
+            os.utime(f, (now + i, now + i))
+        return src
+
+    src = memo.get(spark, "late_split", sf_dir, build)
+    return src + "/f*"  # glob path covering every slice dir
 
 
 @register(

@@ -378,9 +378,9 @@ def test_containment_catches_embedded_doc_jaccard_misses(spark):
     )
     import fluent_bit_filter_math_spark.sources as src
 
-    orig_tab, orig_cache = src.table, dict(dd._SHINGLE_CACHE)
+    orig_tab = src.table
     try:
-        dd._SHINGLE_CACHE.clear()
+        dd.release_shingle_index(spark, "unit-test-dir")
         src.table = lambda _s, _d, name: docs
         dd.table = src.table
         pairs = dd.dedup_containment_pairs(spark, "unit-test-dir").collect()
@@ -388,8 +388,7 @@ def test_containment_catches_embedded_doc_jaccard_misses(spark):
     finally:
         src.table = orig_tab
         dd.table = orig_tab
-        dd._SHINGLE_CACHE.clear()
-        dd._SHINGLE_CACHE.update(orig_cache)
+        dd.release_shingle_index(spark, "unit-test-dir")
     got = {(r["doc_a"], r["doc_b"]): r["containment"] for r in pairs}
     # doc 0's 4 shingles all appear in doc 1 → containment exactly 1.0
     assert got[(0, 1)] == 1.0

@@ -4,6 +4,8 @@ and the Arrow-batch stream readers' row fidelity."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -111,27 +113,23 @@ class TestCatalogSchemaCache:
         """The per-path schema cache must hand later reads exactly the
         schema the first read inferred — names, types, nullability —
         and the same rows (metadata-only cache, never data)."""
+        from fluent_bit_filter_math_spark import memo
         from fluent_bit_filter_math_spark.sources.catalog import (
-            _SCHEMA_CACHE,
+            _NANOS_TS_TABLES,
             TABLES,
             table,
         )
 
         for name in TABLES:
-            _SCHEMA_CACHE.pop(
-                next(
-                    (
-                        p
-                        for p in _SCHEMA_CACHE
-                        if p.endswith(f"/{name}.parquet")
-                    ),
-                    "",
-                ),
-                None,
-            )
+            memo.release(spark, "schema", sf_dir)
             first = table(spark, sf_dir, name)  # infers + populates
             again = table(spark, sf_dir, name)  # cached schema
             assert first.schema == again.schema, name
+            if name not in _NANOS_TS_TABLES:
+                inferred = spark.read.parquet(
+                    os.path.join(sf_dir, f"{name}.parquet")
+                )
+                assert again.schema == inferred.schema, name
             assert sorted(map(tuple, first.limit(3).collect())) == sorted(
                 map(tuple, again.limit(3).collect())
             ), name

@@ -139,17 +139,19 @@ def test_jaccard_dfcap_hot_shingles(spark, tmp_path):
 
 
 def test_release_shingle_index_unpersists(spark, sf_dir):
+    from fluent_bit_filter_math_spark import memo
     from fluent_bit_filter_math_spark.operators.dedup import (
-        _SHINGLE_CACHE,
         _shingle_index,
         release_shingle_index,
     )
 
-    _shingle_index(spark, sf_dir)
+    arrays, exploded = _shingle_index(spark, sf_dir)
     app_id = spark.sparkContext.applicationId
-    assert any(k[0] == app_id for k in _SHINGLE_CACHE)
+    assert any(k[:2] == (app_id, "shingle_index") for k in memo._ENTRIES)
+    assert arrays.is_cached and exploded.is_cached
     release_shingle_index(spark)
-    assert not any(k[0] == app_id for k in _SHINGLE_CACHE)
+    assert not any(k[:2] == (app_id, "shingle_index") for k in memo._ENTRIES)
+    assert not arrays.is_cached and not exploded.is_cached
 
 
 # ---------------------------------------------------------------------------
@@ -963,18 +965,20 @@ def test_pagerank_matches_pure_python_fixpoint(spark):
 
 
 def test_release_edge_index_unpersists(spark):
+    from fluent_bit_filter_math_spark import memo
     from fluent_bit_filter_math_spark.operators.graph import (
-        _EDGE_CACHE,
         _edge_index,
         release_edge_index,
     )
 
     sf = "/root/testdata/sf0.001"
-    _edge_index(spark, sf)
+    edges, deg = _edge_index(spark, sf)
     app_id = spark.sparkContext.applicationId
-    assert any(k[0] == app_id for k in _EDGE_CACHE)
+    assert any(k[:2] == (app_id, "edge_index") for k in memo._ENTRIES)
+    assert edges.is_cached and deg.is_cached
     release_edge_index(spark)
-    assert not any(k[0] == app_id for k in _EDGE_CACHE)
+    assert not any(k[:2] == (app_id, "edge_index") for k in memo._ENTRIES)
+    assert not edges.is_cached and not deg.is_cached
 
 
 def test_parameterized_sql(spark):
