@@ -132,7 +132,7 @@ register(
     """,
 )(_fold_query([MathSpec.build("sum", ["VALUE", "K"], "math_out")]))
 
-# --- chained specs: CollapseProject fuses both folds into one projection ---
+# --- chained specs: both folds compile into one projection ----------------
 register(
     "math_chain",
     oracle=f"""
@@ -312,9 +312,9 @@ def stream_mem_source_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The test.sh scenario (4 ops, one with cast_to_int) fused into a
-    single narrow projection — the reference needed four plugin instances
-    (/root/reference/test.sh:17-43); Catalyst collapses ours into one."""
+    """The test.sh scenario (4 ops, one with cast_to_int) compiled into a
+    single narrow projection over one parse of ``props`` — the reference
+    needed four plugin instances (/root/reference/test.sh:17-43)."""
     specs = [
         MathSpec.build("sum", ["value", "k"], "used_plus_total", cast_to_int=True),
         MathSpec.build("sub", ["value", "k"], "used_minus_total"),
@@ -483,12 +483,14 @@ def pysink_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pysink_split_src(spark: SparkSession, sf_dir: str) -> str:
     """Two event_id-parity replay files of the folded columns,
     memoized per sf_dir (data prep, not the operator under test)."""
-    import glob as _glob
     import os
-    import time
 
     from fluent_bit_filter_math_spark.functions import exact_cents
-    from fluent_bit_filter_math_spark.scratch import dir_key, scratch_dir
+    from fluent_bit_filter_math_spark.scratch import (
+        dir_key,
+        scratch_dir,
+        write_replay_split,
+    )
 
     def build() -> str:
         base = scratch_dir(f"pysink-split-{dir_key(sf_dir)}")
@@ -499,20 +501,13 @@ def _pysink_split_src(spark: SparkSession, sf_dir: str) -> str:
             exact_cents(F.col("value")).alias("cents"),
             (exact_cents(F.col("value")) + F.col("user_id")).alias("fold_sum"),
         )
-        ev.filter(F.col("event_id") % 20 == 5).coalesce(1).write.parquet(
-            os.path.join(src, "f0")
+        write_replay_split(
+            src,
+            [
+                ev.filter(F.col("event_id") % 20 == 5),
+                ev.filter(F.col("event_id") % 20 == 15),
+            ],
         )
-        ev.filter(F.col("event_id") % 20 == 15).coalesce(1).write.parquet(
-            os.path.join(src, "f1")
-        )
-        now = time.time()
-        files = sorted(_glob.glob(src + "/f*/part-*.parquet"))
-        if len(files) != 2:
-            raise RuntimeError(
-                f"two-file replay contract violated: {len(files)} data files"
-            )
-        for i, f in enumerate(files):
-            os.utime(f, (now + i, now + i))
         return src
 
     src = memo.get(spark, "pysink_split", sf_dir, build)

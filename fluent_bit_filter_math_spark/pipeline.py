@@ -5,14 +5,19 @@ The reference's execution loop (cb_math_filter,
 Spark that loop *is* the engine — a batch job or a Structured Streaming
 micro-batch. The functions here only assemble plans:
 
-* :func:`apply_specs` — chain several specs over one DataFrame. Catalyst's
-  CollapseProject fuses the stacked withColumns into a single projection,
-  so N chained "filter instances" (test.sh:18-41 runs four) cost one pass.
+* :func:`apply_specs` — chain several specs over one DataFrame (test.sh:18-41
+  runs four "filter instances"). Like the reference, which unpacks each
+  record once (math.c:322) and looks every operand up in that map, a
+  call reads the input's column names once, parses each JSON column once
+  into a hidden column, and compiles the whole list into one
+  ``withColumns`` over it (:func:`compile.project_specs`): one projection,
+  one parse per JSON column, however many specs and operands.
+* :func:`apply_specs_passthrough` — the same projection, with malformed
+  payloads passed through; its guard reads the same parsed column.
 * :func:`route_by_tag` — the Fluent Bit tag-routing analogue
   (math.c:292; /root/reference/test.sh:17-43): per-tag spec chains applied
-  to the matching slice of the stream. Implemented as a single unioned
-  plan per tag (filter + transform), which Spark executes as one narrow
-  stage per branch — no shuffle.
+  to the matching slice of the stream, one filter + projection per tag,
+  which Spark executes as one narrow stage per branch — no shuffle.
 * :func:`read_events_stream` / :func:`run_stream_to_memory` — streaming
   parity harness: replay a parquet table as a stream and run it with
   ``trigger(availableNow=True)``, proving batch ≡ stream for every spec.
@@ -27,16 +32,17 @@ from typing import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fluent_bit_filter_math_spark.compile import apply_spec, compile_spec
+from fluent_bit_filter_math_spark import memo
+from fluent_bit_filter_math_spark.compile import project_specs
 from fluent_bit_filter_math_spark.spec import MathSpec
 
 
 def apply_specs(
     df: DataFrame, specs: Sequence[MathSpec], json_cols=("props",)
 ) -> DataFrame:
-    for spec in specs:
-        df = apply_spec(df, spec, json_cols)
-    return df
+    """Apply a spec chain in order: one projection, each JSON column
+    parsed once; a spec reads what the specs before it wrote."""
+    return project_specs(df, specs, json_cols)
 
 
 def apply_specs_passthrough(
@@ -51,24 +57,10 @@ def apply_specs_passthrough(
     JSON, or a JSON array/scalar). For those rows every original column
     passes through untouched and the output field stays NULL ("absent");
     a NULL ``json_col`` is a record *without* a dynamic payload — still
-    well-formed, keys simply coerce to 0 (math.c:164).
+    well-formed, keys simply coerce to 0 (math.c:164). The guard reads
+    the same parsed column as the operands.
     """
-    from fluent_bit_filter_math_spark.coerce import lowered_json_map
-
-    well_formed = F.col(json_col).isNull() | lowered_json_map(
-        F.col(json_col)
-    ).isNotNull()
-    for spec in specs:
-        out = compile_spec(spec, df, (json_col,))
-        if spec.cast_to_int:
-            out_type = "long"
-        else:
-            out_type = "double"
-        df = df.withColumn(
-            spec.output_field,
-            F.when(well_formed, out).otherwise(F.lit(None)).cast(out_type),
-        )
-    return df
+    return project_specs(df, specs, (json_col,), guard_col=json_col)
 
 
 def route_by_tag(
@@ -78,8 +70,11 @@ def route_by_tag(
     json_cols=("props",),
 ) -> dict[str, DataFrame]:
     """One transformed DataFrame per tag, filtered like Fluent Bit routing."""
+    columns = df.columns
     return {
-        tag: apply_specs(df.filter(F.col(tag_col) == F.lit(tag)), specs, json_cols)
+        tag: project_specs(
+            df.filter(F.col(tag_col) == F.lit(tag)), specs, json_cols, columns
+        )
         for tag, specs in routes.items()
     }
 
@@ -99,10 +94,16 @@ def read_events_stream(
         schema = spark.read.parquet(path).schema
     if os.path.isfile(path):
         # The file stream source wants a directory; expose the single
-        # fixture file through a symlink dir (fixtures are read-only).
-        d = tempfile.mkdtemp(prefix="stream-src-")
-        os.symlink(os.path.abspath(path), os.path.join(d, "part-0.parquet"))
-        path = d
+        # fixture file through a symlink dir (fixtures are read-only),
+        # one per context and file.
+        src = os.path.abspath(path)
+
+        def link_dir() -> str:
+            d = memo.private_dir("stream-src")
+            os.symlink(src, os.path.join(d, "part-0.parquet"))
+            return d
+
+        path = memo.get(spark, "stream_src", src, link_dir)
     stream = spark.readStream.schema(schema).format("parquet").load(path)
     if drop_nanos:
         for name, dtype in stream.dtypes:

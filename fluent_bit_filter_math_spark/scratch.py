@@ -24,15 +24,21 @@ read the result back. They need a scratch dir that is
   time with a missing-path error instead of silently reading the new
   invocation's files (r8 ADVICE: the old wipe-in-place reuse made
   stale reads succeed on wrong data).
+
+:func:`write_replay_split` writes the multi-file replay sources the
+stream queries' split builders keep in such a dir.
 """
 
 from __future__ import annotations
 
 import atexit
+import glob
 import hashlib
 import os
 import shutil
 import tempfile
+import time
+from typing import Sequence
 
 _BASES: dict[str, str] = {}
 _GENS: dict[str, int] = {}
@@ -79,3 +85,26 @@ def scratch_dir(tag: str) -> str:
     d = os.path.join(base, f"gen-{gen}")
     os.makedirs(d)
     return d
+
+
+def write_replay_split(src: str, slices: Sequence) -> None:
+    """Write each DataFrame of ``slices`` as ONE parquet file under
+    ``src/f<i>`` and order their mtimes by ``i``, so a file stream over
+    ``src/f*`` with ``maxFilesPerTrigger=1`` replays them one
+    micro-batch each, in list order (FileStreamSource orders files by
+    modification time). Raises unless every slice wrote exactly one
+    data file — the replay's closed form depends on it."""
+    for i, part in enumerate(slices):
+        part.coalesce(1).write.parquet(os.path.join(src, f"f{i}"))
+    files = [
+        glob.glob(os.path.join(src, f"f{i}", "part-*.parquet"))
+        for i in range(len(slices))
+    ]
+    if any(len(f) != 1 for f in files):  # not assert: must hold under -O
+        raise RuntimeError(
+            f"{len(slices)}-file replay contract violated: data files per"
+            f" slice {[len(f) for f in files]}"
+        )
+    now = time.time()
+    for i, (f,) in enumerate(files):
+        os.utime(f, (now + i, now + i))

@@ -19,7 +19,10 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from fluent_bit_filter_math_spark import memo
 
 
 def get_spark(
@@ -52,16 +55,16 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Managed-table warehouse for the bucketed-write path; pid-scoped
-        # because the in-memory catalog dies with the process while the
-        # location doesn't — a stale location fails the next process's
-        # saveAsTable with LOCATION_ALREADY_EXISTS.
-        .config(
-            "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE",
-                f"/tmp/spark-graft-warehouse-{os.getpid()}",
-            ),
-        )
     )
+    if SparkContext._active_spark_context is None:
+        # getOrCreate will start a context: give it a managed-table
+        # warehouse for the bucketed-write path. A fresh private dir per
+        # context, removed at exit: the in-memory catalog dies with the
+        # context while the location doesn't, and a stale location fails
+        # the next saveAsTable with LOCATION_ALREADY_EXISTS; a
+        # predictable path could also be a dir someone else made.
+        warehouse = os.environ.get("SPARK_GRAFT_WAREHOUSE") or memo.private_dir(
+            "warehouse"
+        )
+        builder = builder.config("spark.sql.warehouse.dir", warehouse)
     return builder.getOrCreate()

@@ -555,11 +555,13 @@ def _idle_split_src(spark: SparkSession, sf_dir: str) -> str:
     The key includes the split fraction because the slicing-invariance
     test varies it.
     """
-    import glob
     import os
-    import time
 
-    from fluent_bit_filter_math_spark.scratch import dir_key, scratch_dir
+    from fluent_bit_filter_math_spark.scratch import (
+        dir_key,
+        scratch_dir,
+        write_replay_split,
+    )
     from fluent_bit_filter_math_spark.sources import table
 
     frac = float(_TWS_IDLE_SPLIT_FRAC)
@@ -574,9 +576,8 @@ def _idle_split_src(spark: SparkSession, sf_dir: str) -> str:
         )
         # Exactly two event-time-ranged files, split at an exact
         # percentile of event time (deterministic; the contract above is
-        # only a closed form for a 2-file replay). mtimes force
-        # oldest-range-first replay (FileStreamSource orders by
-        # modification time).
+        # only a closed form for a 2-file replay), replayed
+        # oldest-range first.
         us = F.unix_micros(F.col("ts"))
         boundary = int(
             ev.select(
@@ -585,21 +586,9 @@ def _idle_split_src(spark: SparkSession, sf_dir: str) -> str:
                 ).alias("q")
             ).collect()[0]["q"]
         )
-        ev.filter(us <= boundary).coalesce(1).write.parquet(
-            os.path.join(src, "f0")
+        write_replay_split(
+            src, [ev.filter(us <= boundary), ev.filter(us > boundary)]
         )
-        ev.filter(us > boundary).coalesce(1).write.parquet(
-            os.path.join(src, "f1")
-        )
-        now = time.time()
-        files = sorted(glob.glob(src + "/f*/part-*.parquet"))
-        if len(files) != 2:  # not assert: must hold under python -O too
-            raise RuntimeError(
-                f"two-file replay contract violated: {len(files)} data files"
-                " — degenerate percentile split or multi-part write"
-            )
-        for i, f in enumerate(files):
-            os.utime(f, (now + i, now + i))
         return src
 
     src = memo.get(spark, "idle_split", sf_dir, build, frac)
@@ -776,11 +765,13 @@ _TWS_KMV_OUT = (
 def _kmv_split_src(spark: SparkSession, sf_dir: str) -> str:
     """Two event_id-parity replay files (event_type, 56-bit user hash),
     memoized per sf_dir like the other split builders."""
-    import glob
     import os
-    import time
 
-    from fluent_bit_filter_math_spark.scratch import dir_key, scratch_dir
+    from fluent_bit_filter_math_spark.scratch import (
+        dir_key,
+        scratch_dir,
+        write_replay_split,
+    )
 
     def build() -> str:
         base = scratch_dir(f"tws-kmv-{dir_key(sf_dir)}")
@@ -795,20 +786,11 @@ def _kmv_split_src(spark: SparkSession, sf_dir: str) -> str:
                 16, 10,
             ).cast("long").alias("hv"),
         )
-        ev.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-            os.path.join(src, "f0")
+        write_replay_split(
+            src,
+            [ev.filter(F.col("event_id") % 2 == 0),
+             ev.filter(F.col("event_id") % 2 == 1)],
         )
-        ev.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-            os.path.join(src, "f1")
-        )
-        now = time.time()
-        files = sorted(glob.glob(src + "/f*/part-*.parquet"))
-        if len(files) != 2:
-            raise RuntimeError(
-                f"two-file replay contract violated: {len(files)} data files"
-            )
-        for i, f in enumerate(files):
-            os.utime(f, (now + i, now + i))
         return src
 
     src = memo.get(spark, "kmv_split", sf_dir, build)
@@ -912,11 +894,13 @@ def _pri_split_src(spark: SparkSession, sf_dir: str) -> str:
     """Two event_id-parity replay files of (event_type, skey, event_id,
     w) with skey = hv/w computed IN-PLAN (the batch query's exact
     Column expression), memoized per sf_dir."""
-    import glob
     import os
-    import time
 
-    from fluent_bit_filter_math_spark.scratch import dir_key, scratch_dir
+    from fluent_bit_filter_math_spark.scratch import (
+        dir_key,
+        scratch_dir,
+        write_replay_split,
+    )
 
     def build() -> str:
         base = scratch_dir(f"tws-pri-{dir_key(sf_dir)}")
@@ -942,20 +926,11 @@ def _pri_split_src(spark: SparkSession, sf_dir: str) -> str:
             "w",
             (F.col("hv").cast("double") / F.col("w")).alias("skey"),
         )
-        base_df.filter(F.col("event_id") % 2 == 0).coalesce(1).write.parquet(
-            os.path.join(src, "f0")
+        write_replay_split(
+            src,
+            [base_df.filter(F.col("event_id") % 2 == 0),
+             base_df.filter(F.col("event_id") % 2 == 1)],
         )
-        base_df.filter(F.col("event_id") % 2 == 1).coalesce(1).write.parquet(
-            os.path.join(src, "f1")
-        )
-        now = time.time()
-        files = sorted(glob.glob(src + "/f*/part-*.parquet"))
-        if len(files) != 2:
-            raise RuntimeError(
-                f"two-file replay contract violated: {len(files)} data files"
-            )
-        for i, f in enumerate(files):
-            os.utime(f, (now + i, now + i))
         return src
 
     src = memo.get(spark, "pri_split", sf_dir, build)

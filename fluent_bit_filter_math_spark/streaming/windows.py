@@ -837,11 +837,13 @@ def _late_split_src(spark: SparkSession, sf_dir: str) -> str:
     """Three-file replay: f0 = in-order old half (minus stragglers),
     f1 = new half, f2 = stragglers (old rows arriving last). Memoized
     per sf_dir like the idle-close split (data prep, not the operator)."""
-    import glob
     import os
-    import time
 
-    from fluent_bit_filter_math_spark.scratch import dir_key, scratch_dir
+    from fluent_bit_filter_math_spark.scratch import (
+        dir_key,
+        scratch_dir,
+        write_replay_split,
+    )
 
     def build() -> str:
         base = scratch_dir(f"late-audit-{dir_key(sf_dir)}")
@@ -856,21 +858,13 @@ def _late_split_src(spark: SparkSession, sf_dir: str) -> str:
             ).collect()[0]["q"]
         )
         strag = (us <= boundary) & (F.col("event_id") % _LATE_STRAG_MOD == 0)
-        ev.filter((us <= boundary) & ~strag).coalesce(1).write.parquet(
-            os.path.join(src, "f0")
+        # single-shard writes are load-bearing (above)
+        write_replay_split(
+            src,
+            [ev.filter((us <= boundary) & ~strag),
+             ev.filter(us > boundary),
+             ev.filter(strag)],
         )
-        ev.filter(us > boundary).coalesce(1).write.parquet(
-            os.path.join(src, "f1")
-        )
-        ev.filter(strag).coalesce(1).write.parquet(os.path.join(src, "f2"))
-        now = time.time()
-        files = sorted(glob.glob(src + "/f*/part-*.parquet"))
-        if len(files) != 3:  # single-shard writes are load-bearing (above)
-            raise RuntimeError(
-                f"three-file replay contract violated: {len(files)} data files"
-            )
-        for i, f in enumerate(files):
-            os.utime(f, (now + i, now + i))
         return src
 
     src = memo.get(spark, "late_split", sf_dir, build)

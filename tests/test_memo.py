@@ -226,3 +226,38 @@ def test_vec_expr_cache_keys_unique_under_nested_hofs(spark):
     assert got.c1 == [pytest.approx(3 / (5**0.5 * 2**0.5))]
     assert got.c3 == [pytest.approx(7 / (5 * 2**0.5))]
     assert got.c4 == [pytest.approx(5**0.5)] and got.c5 == [5.0]
+
+
+def test_stream_source_link_dir_is_one_per_file(spark, tmp_path, monkeypatch):
+    """A single-file stream source gets one symlink dir per context and
+    file, however often it is replayed, and release removes it."""
+    import tempfile
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fluent_bit_filter_math_spark.pipeline import read_events_stream
+
+    src = tmp_path / "events.parquet"
+    pq.write_table(pa.table({"event_id": [1, 2]}), src)
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    for _ in range(2):
+        read_events_stream(spark, str(src))
+    assert len(list(tmp.glob("fbm-stream-src-*"))) == 1
+    memo.release(spark, "stream_src")
+    assert list(tmp.glob("fbm-stream-src-*")) == []
+
+
+def test_warehouse_is_private_and_made_only_for_a_new_context(
+    spark, monkeypatch
+):
+    from fluent_bit_filter_math_spark.session import get_spark
+
+    path = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    if "SPARK_GRAFT_WAREHOUSE" not in os.environ:
+        assert os.path.basename(path).startswith("fbm-warehouse-")
+        assert stat.S_IMODE(os.stat(path).st_mode) == 0o700
+    monkeypatch.setattr(memo, "private_dir", pytest.fail)
+    assert get_spark("fbm-spark-tests", "local[4]", 4) is spark

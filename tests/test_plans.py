@@ -3,7 +3,8 @@ claims are pinned here so a refactor can't silently lose them:
 
 * math folds stay narrow (zero shuffles — the reference pipeline's key
   scale property, SURVEY.md §3.4);
-* chained specs collapse into one projection (CollapseProject);
+* chained specs compile into one projection over one parse of the
+  JSON payload;
 * filters and column pruning reach the parquet scan (PushedFilters /
   ReadSchema);
 * small dimensions broadcast instead of shuffling the fact table;
@@ -42,11 +43,18 @@ def plan_of(df: DataFrame) -> str:
 
 def test_math_fold_is_narrow_single_projection(spark, sf_dir):
     # Four chained specs (the flagship) must compile to ONE projection
-    # over the scan with no shuffle anywhere — the whole reference
-    # surface is a single narrow stage (SURVEY.md §3.4).
+    # over ONE parse of props (math.c:322 unpacks each record once) with
+    # no shuffle anywhere — the whole reference surface is a narrow
+    # stage (SURVEY.md §3.4). The parse is the only other projection.
     plan = plan_of(flagship(spark, sf_dir))
     assert "Exchange" not in plan
-    assert len(re.findall(r"\(\d+\) Project", plan)) == 1
+    assert len(re.findall(r"\(\d+\) Project", plan)) == 2
+    assert plan.count("from_json(") == 1
+    outs = ("used_plus_total", "used_minus_total", "used_times_total",
+            "used_div_total")
+    assert any(
+        all(f" AS {o}#" in line for o in outs) for line in plan.splitlines()
+    )
     # Dynamic-map access stays JVM-side: no Python evaluation operators.
     assert "Python" not in plan
 

@@ -1011,7 +1011,7 @@ def test_tws_idle_close_slicing_invariant(spark):
     pd.testing.assert_frame_equal(a, b)
 
 
-def test_stateful_checkpoint_recovery_mid_replay(spark):
+def test_stateful_checkpoint_recovery_mid_replay(spark, tmp_path):
     """Stop a stateful stream after its first micro-batch, restart
     from the SAME checkpoint, and verify the recovered state store:
     users emitted after the restart must report FULL-history totals
@@ -1021,7 +1021,6 @@ def test_stateful_checkpoint_recovery_mid_replay(spark):
     asserted."""
     import glob
     import os
-    import tempfile
     import time
 
     from pyspark.sql import functions as F
@@ -1036,7 +1035,7 @@ def test_stateful_checkpoint_recovery_mid_replay(spark):
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     sf_dir = "/root/testdata/sf0.001"
-    base = tempfile.mkdtemp(prefix="ckpt-recovery-")
+    base = str(tmp_path)
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     ev = table(spark, sf_dir, "events").select(
