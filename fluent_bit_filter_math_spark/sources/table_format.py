@@ -15,30 +15,49 @@ Lake: High-Performance ACID Table Storage over Cloud Object Stores"):
   (files made dead) lists plus the writer's schema DDL. A snapshot at
   version V = replay commits 0..V, live set = Σadd − Σremove.
 * Writers stage parquet under a UUID subdirectory first, then publish
-  with ONE ``open(log, "x")`` exclusive create — the commit either
-  exists completely or not at all, so readers get snapshot isolation
-  without locks, and two racing writers of the same version lose
-  deterministically (optimistic concurrency: the loser retries on top
-  of the winner — Delta's commit protocol, collapsed to a local FS).
+  the commit file with ONE exclusive hard link of a fully written temp
+  file — the commit either exists completely or not at all, so readers
+  get snapshot isolation without locks, and two racing writers of the
+  same version lose deterministically (optimistic concurrency: the
+  loser retries on top of the winner — Delta's commit protocol,
+  collapsed to a local FS).
 * Readers NEVER list data files (the object-store-listing trap the
   log-structured design exists to avoid): the live set comes from the
   log alone, so `spark.read.parquet(*live_files)` scans exactly one
   snapshot — time travel is replaying a shorter prefix.
 
+Storage requirement: a table lives on a LOCAL POSIX filesystem that
+supports hard links (``os.link``). The exclusive publish depends on
+link(2) failing when the name is taken; a filesystem that refuses hard
+links fails every commit loudly instead of publishing without that
+guarantee.
+
 Scale shape: the log is O(commits) tiny JSON — the 100 TB of data sits
 in parquet that Spark scans with full pushdown/pruning (the read path
 IS `spark.read.parquet`, so PushedFilters/partition pruning work
-unchanged); snapshot resolution is a driver-side replay of the commit
-chain, exactly like Delta/Iceberg metadata handling.
+unchanged). Snapshot resolution is one driver-side fold of the commit
+chain into a per-table state (:class:`_LogState`: live files, schema,
+reader requirement, constraints, column mapping, ADD/DROP/widen state,
+txn ids), Delta's log-segment recipe: the fold starts from the nearest
+state at or below the wanted version — the process's cached state of
+that table, the newest checkpoint, or the empty table — and applies
+only the commits after it. Every operation resolves one state and
+reads what it needs from it.
 """
 
 from __future__ import annotations
 
 import base64
+import errno
 import hashlib
 import json
 import os
+import threading
+import time
 import uuid
+from collections.abc import Mapping
+from types import MappingProxyType, SimpleNamespace
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -88,7 +107,10 @@ def _create_exclusive(path: str, payload: str) -> None:
     file first, fsyncing, then ``os.link``-ing into place keeps the
     exclusive-create semantics (link raises FileExistsError when the
     name is taken) while guaranteeing any reader that can open *path*
-    sees the complete payload."""
+    sees the complete payload.
+
+    A filesystem without hard links raises instead of falling back to
+    a publish that could expose partial JSON."""
     tmp = f"{path}.{uuid.uuid4().hex[:12]}.inprogress"
     with open(tmp, "w") as f:
         f.write(payload)
@@ -96,6 +118,14 @@ def _create_exclusive(path: str, payload: str) -> None:
         os.fsync(f.fileno())
     try:
         os.link(tmp, path)
+    except OSError as exc:
+        if exc.errno not in (errno.EPERM, errno.EOPNOTSUPP, errno.ENOTSUP):
+            raise
+        raise OSError(
+            exc.errno,
+            f"cannot publish {path}: the table format needs a local POSIX "
+            f"filesystem with hard link support ({exc.strerror})",
+        ) from exc
     finally:
         os.unlink(tmp)
 
@@ -158,64 +188,15 @@ def _commit_min_reader(commit: dict) -> int:
     return req
 
 
-# prefix-max of per-commit requirements, incrementally extended — the
-# committed_batch_ids cache discipline (commits are immutable). Values
-# are IMMUTABLE tuples swapped whole (never mutated in place): the
-# cache is reachable from several driver threads at once under
-# overlap() (ADVICE r16), and two threads extending a shared list can
-# interleave reads of its length with appends, misaligning entries.
-# Each thread extends a private copy and publishes it with one atomic
-# assignment; racing publishes are prefix-consistent (commits are
-# immutable), so either winner is correct.
-_PROTO_CACHE: dict[str, tuple[int, ...]] = {}
-
-
-def required_reader_version(
-    table_path: str, version: int | None = None
-) -> int:
-    """The minimum reader version able to correctly resolve the
-    snapshot at *version* (default: head) — the running maximum of the
-    commit prefix's requirements (a feature, once introduced, shapes
-    every later snapshot's live state)."""
-    head = latest_version(table_path)
-    v = head if version is None else version
-    if v < 0:
-        return _FEATURE_BASE
-    key = os.path.abspath(table_path)
-    pm = _PROTO_CACHE.get(key, ())
-    if len(pm) <= head:
-        ext = list(pm)
-        for w in range(len(ext), head + 1):
-            try:
-                with open(_log_path(table_path, w)) as f:
-                    r = _commit_min_reader(json.load(f))
-            except (FileNotFoundError, json.JSONDecodeError):
-                # a head ahead of the readable files (racing writer /
-                # eventually-consistent listing): judge what is cleanly
-                # readable; the replay itself will surface the missing
-                # commit where it matters. JSONDecodeError is belt and
-                # braces — _create_exclusive makes commits
-                # reader-atomic, so a torn read should no longer occur.
-                break
-            ext.append(max(r, ext[-1] if ext else _FEATURE_BASE))
-        if len(ext) > len(_PROTO_CACHE.get(key, ())):
-            _PROTO_CACHE[key] = tuple(ext)
-        pm = tuple(ext)
-    if not pm:
-        return _FEATURE_BASE
-    return pm[min(v, len(pm) - 1)]
-
-
-def _check_protocol(
-    table_path: str,
-    version: int | None = None,
-    supported: int | None = None,
+def _gate(
+    s: _LogState, table_path: str, supported: int | None = None
 ) -> None:
+    """Refuse a state whose log needs a newer reader than *supported*
+    (default: this build)."""
     sup = READER_VERSION if supported is None else supported
-    req = required_reader_version(table_path, version)
-    if req > sup:
+    if s.reader > sup:
         raise ProtocolUnsupported(
-            f"table at {table_path} requires reader version {req} "
+            f"table at {table_path} requires reader version {s.reader} "
             f"(this reader supports {sup}): refusing to read rather "
             "than silently misreading a feature this build predates"
         )
@@ -226,12 +207,12 @@ def _check_protocol(
 # every snapshot read replays the WHOLE commit chain, so metadata cost
 # grows linearly with table age (a streaming sink committing every
 # minute = half a million commits a year). A checkpoint at version V
-# is one JSON file holding the fully-replayed live state at V; a
-# reader starts from the newest checkpoint ≤ its target version and
-# replays only the commits after it. Checkpoints are written with the
-# same `open(x)` atomic publish as commits and are PURELY an
-# accelerator: deleting every checkpoint file only makes reads slower,
-# never wrong (pinned in tests).
+# is one JSON file holding the folded state at V; a reader starts from
+# the newest checkpoint ≤ its target version and replays only the
+# commits after it. Checkpoints are written with the same atomic
+# publish as commits and are PURELY an accelerator: deleting every
+# checkpoint file only makes reads slower, never wrong (pinned in
+# tests), and a checkpoint lacking any field the fold needs is ignored.
 # ---------------------------------------------------------------------------
 _CKPT_EVERY = 10  # write a checkpoint every N commits (Delta's default)
 
@@ -242,14 +223,11 @@ def _ckpt_path(table_path: str, version: int) -> str:
     )
 
 
-def latest_checkpoint(
-    table_path: str, max_version: int
-) -> tuple[int, dict] | None:
-    """(version, {rel: [schema, stats]}) of the newest checkpoint at or
-    below *max_version*, or None."""
+def _newest_checkpoint(table_path: str, max_version: int) -> int:
+    """Version of the newest checkpoint at or below *max_version*, or -1."""
     log = os.path.join(table_path, _LOG_DIR)
     if not os.path.isdir(log):
-        return None
+        return -1
     suffix = ".checkpoint.json"
     best = -1
     for f in os.listdir(log):
@@ -258,112 +236,390 @@ def latest_checkpoint(
         stem = f[: -len(suffix)]
         if stem.isdigit() and best < int(stem) <= max_version:
             best = int(stem)
-    if best < 0:
+    return best
+
+
+def latest_checkpoint(
+    table_path: str, max_version: int
+) -> tuple[int, dict] | None:
+    """(version, checkpoint payload) of the newest checkpoint at or
+    below *max_version*, or None."""
+    v = _newest_checkpoint(table_path, max_version)
+    if v < 0:
         return None
-    with open(_ckpt_path(table_path, best)) as f:
-        return best, json.load(f)
+    with open(_ckpt_path(table_path, v)) as f:
+        return v, json.load(f)
 
 
 def write_checkpoint(table_path: str, version: int | None = None) -> int:
-    """Materialize the replayed state at *version* (default: head) as a
+    """Materialize the folded state at *version* (default: head) as a
     checkpoint file. Idempotent: an existing checkpoint at that
     version is left in place (its content is a pure function of the
     immutable commit prefix)."""
-    v = latest_version(table_path) if version is None else version
-    schema, live = _resolve_live(table_path, v)
+    s = _state(table_path, version)
     payload = json.dumps(
         {
-            "version": v,
-            "live": {
-                rel: [sch, stats, dv]
-                for rel, (sch, stats, dv) in live.items()
-            },
-            "schema": schema,
+            "version": s.version,
+            "live": {rel: list(e) for rel, e in s.live.items()},
+            "schema": s.schema,
+            "reader": s.reader,
+            # ordered maps as pair lists: sort_keys must not reorder them
+            "constraints": list(s.constraints.items()),
+            "mapping": list(s.mapping.items()),
+            "added": list(s.added.items()),
+            "dropped": sorted(s.dropped),
+            "widened": list(s.widened.items()),
+            "batch_ids": sorted(s.batch_ids),
+            "merge_txn_ids": sorted(s.merge_txn_ids),
         },
         sort_keys=True,
     )
     try:
-        _create_exclusive(_ckpt_path(table_path, v), payload)
+        _create_exclusive(_ckpt_path(table_path, s.version), payload)
     except FileExistsError:
         pass  # same prefix => same content; first writer wins
-    return v
+    return s.version
 
 
-def _resolve_live(
-    table_path: str, version: int
-) -> tuple[str, dict[str, tuple[str, dict, str | None]]]:
-    """(newest schema DDL, {rel: (writer schema, stats, deletion-vector
-    rel path | None)}) at *version*, starting from the newest
-    checkpoint ≤ version when one exists. A ``dv`` commit action
-    attaches/replaces a file's deletion vector without touching the
-    file itself (Delta's row-level-delete recipe)."""
-    # the protocol gate guards every read AND write path (writers
-    # resolve before staging): a build that cannot read a feature
-    # must not commit on top of it either
-    _check_protocol(table_path, version)
-    live: dict[str, tuple[str, dict, str | None]] = {}
-    schema = ""
-    start = 0
-    ckpt = latest_checkpoint(table_path, version)
-    if ckpt is not None:
-        cv, state = ckpt
-        # pre-DV checkpoints hold 2-element entries — pad forever
-        live = {
-            rel: (e[0], e[1], e[2] if len(e) > 2 else None)
-            for rel, e in state["live"].items()
-        }
-        schema = state.get("schema", "")
-        start = cv + 1
-    for v in range(start, version + 1):
-        p = _log_path(table_path, v)
-        with open(p) as f:
-            commit = json.load(f)
-        for rel in commit.get("remove", []):
-            live.pop(rel, None)
-        sch = commit.get("schema", schema)
-        for entry in commit.get("add", []):
-            # a restore commit re-adds files from older generations:
-            # its add entries carry that file's own WRITER schema so
-            # one commit can resurrect a mixed-generation live set
-            fsch = (
-                entry.get("schema", sch)
-                if isinstance(entry, dict)
-                else sch
+def _load_checkpoint(
+    table_path: str, after: int, max_version: int
+) -> _LogState | None:
+    """The newest checkpoint in (*after*, *max_version*] as a state, or
+    None. A checkpoint missing a field the fold needs (one written
+    before the fold kept it, or a pre-DV one with 2-element live
+    entries) counts as absent: commit files are never deleted, so the
+    fold replays them instead."""
+    v = _newest_checkpoint(table_path, max_version)
+    if v <= after:
+        return None
+    try:
+        with open(_ckpt_path(table_path, v)) as f:
+            c = json.load(f)
+        return _freeze(
+            SimpleNamespace(
+                version=v,
+                schema=c["schema"],
+                live={
+                    rel: (sch, stats, dv)
+                    for rel, (sch, stats, dv) in c["live"].items()
+                },
+                reader=int(c["reader"]),
+                constraints=dict(c["constraints"]),
+                mapping=dict(c["mapping"]),
+                added=dict(c["added"]),
+                dropped=set(c["dropped"]),
+                widened=dict(c["widened"]),
+                batch_ids=set(c["batch_ids"]),
+                merge_txn_ids=set(c["merge_txn_ids"]),
+                stamp=_stamp(table_path, v),
             )
-            live[_add_path(entry)] = (fsch, _add_stats(entry), None)
-        for entry in commit.get("dv", []):
-            rel = entry["path"]
-            if rel in live:  # a dv on a since-removed file is inert
-                fsch, stats, _ = live[rel]
-                live[rel] = (fsch, stats, entry["dv"])
-        schema = sch
-    return schema, live
+        )
+    except (OSError, KeyError, TypeError, ValueError):
+        return None
+
+
+# ---------------------------------------------------------------------------
+# LOG STATE — one fold of the commit log. ``_commit`` is the only code
+# that opens a commit file, ``_step`` the only code that knows what a
+# commit action does to table state, and ``_state`` the only resolver:
+# it starts from the nearest of the cached state, the newest checkpoint
+# and the empty table at or below the wanted version, folds the commits
+# after it, publishes the result to the cache and applies the protocol
+# gate. An operation resolves one state at its read version and reads
+# every field it needs from it.
+# ---------------------------------------------------------------------------
+_NONE: Mapping = MappingProxyType({})
+
+
+class _LogState(NamedTuple):
+    """The table at one version, folded from commits 0..version. Never
+    mutated: a fold steps a private copy (:func:`_thaw`)."""
+
+    version: int = -1
+    schema: str = ""  # newest schema DDL
+    # {rel: (writer schema DDL, column stats, deletion-vector rel | None)}
+    live: Mapping[str, tuple] = _NONE
+    reader: int = _FEATURE_BASE  # max reader requirement of the prefix
+    constraints: Mapping[str, str] = _NONE  # {name: CHECK expression}
+    mapping: Mapping[str, str] = _NONE  # {logical: physical}; {} = identity
+    added: Mapping[str, str] = _NONE  # {physical: type}, in ADD order
+    dropped: frozenset = frozenset()  # tombstoned physical names
+    widened: Mapping[str, str] = _NONE  # {physical: widest type}
+    batch_ids: frozenset = frozenset()  # append epochs (``batch_id``)
+    merge_txn_ids: frozenset = frozenset()  # idempotent MERGE txns
+    stamp: tuple | None = None  # identity of the commit file at version
+
+    @property
+    def files(self) -> list[tuple[str, dict, str | None]]:
+        """[(rel path, per-file column stats, dv rel | None)]."""
+        return [(rel, st, dv) for rel, (_, st, dv) in self.live.items()]
+
+    @property
+    def evolved(self) -> bool:
+        """Live files span more than one writer schema (the reader must
+        mergeSchema)."""
+        return len({sch for sch, _, _ in self.live.values()}) > 1
+
+    @property
+    def read_schema(self) -> str | None:
+        """Explicit read schema of a widened snapshot: the union of its
+        live files' writer schemas, widened types last. None when no
+        column was widened."""
+        if not self.widened:
+            return None
+        return _union_schema_of(
+            (sch for sch, _, _ in self.live.values()), self.widened
+        )
+
+    @property
+    def physical_columns(self) -> list[str]:
+        """The union of the live files' writer schemas plus declared
+        adds, minus tombstones — the honest source of the table's
+        columns (the newest commit's DDL alone can lag behind an
+        evolved live set)."""
+        seen: list[str] = []
+        for sch, _, _ in self.live.values():
+            for field in _split_ddl_fields(sch):
+                name = field.split(" ", 1)[0].strip("`")
+                if name not in seen:
+                    seen.append(name)
+        seen += [c for c in self.added if c not in seen]
+        return [c for c in seen if c not in self.dropped]
+
+    @property
+    def logical_columns(self) -> list[str]:
+        """:attr:`physical_columns` under their current logical names."""
+        inv = {p: l for l, p in self.mapping.items()}
+        return [inv.get(p, p) for p in self.physical_columns]
+
+    @property
+    def bloom_columns(self) -> tuple[str, ...]:
+        """Physical columns ANY live file blooms. Every rewrite path
+        (compact / merge / update images / overwrite) and every later
+        append re-indexes these, so OPTIMIZE or a trickle of writes can
+        never silently shed the table's point-lookup pruning — the
+        bloom property is TABLE-LEVEL once introduced, like Delta's
+        bloom index config. (Ignoring a bloom is always SAFE —
+        performance only — so this is not a protocol-versioned
+        feature.)"""
+        return tuple(
+            sorted(
+                {
+                    c
+                    for _, stats, _ in self.live.values()
+                    for c, st in stats.items()
+                    if isinstance(st, dict) and "bloom" in st
+                }
+            )
+        )
+
+
+_EMPTY = _LogState()
+
+
+def _commit(table_path: str, version: int) -> dict:
+    """The parsed commit at *version* — the one reader of commit files."""
+    with open(_log_path(table_path, version)) as f:
+        return json.load(f)
+
+
+def _adds(commit: dict, schema: str) -> list[tuple[str, str, dict]]:
+    """(rel, writer schema, stats) of each ``add`` action; *schema* is
+    the newest DDL before the commit. A restore commit re-adds files of
+    older generations, and its entries carry each file's own writer
+    schema, so one commit can resurrect a mixed-generation live set."""
+    sch = commit.get("schema", schema)
+    return [
+        (
+            _add_path(e),
+            e.get("schema", sch) if isinstance(e, dict) else sch,
+            _add_stats(e),
+        )
+        for e in commit.get("add", [])
+    ]
+
+
+def _step(s: SimpleNamespace, commit: dict) -> None:
+    """Apply the next commit to a fold's working state *s* — the one
+    place that knows what each action does to table state."""
+    action = commit.get("action")
+    s.version += 1  # commits fold in version order
+    s.reader = max(s.reader, _commit_min_reader(commit))
+    # data actions (append, delete, update, merge, restore, overwrite,
+    # compact): removes, then adds, then deletion vectors. A ``dv``
+    # action attaches or replaces a file's deletion vector without
+    # touching the file (Delta's row-level-delete recipe).
+    for rel in commit.get("remove", []):
+        s.live.pop(rel, None)
+    for rel, sch, stats in _adds(commit, s.schema):
+        s.live[rel] = (sch, stats, None)
+    for entry in commit.get("dv", []):
+        rel = entry["path"]
+        if rel in s.live:  # a dv on a since-removed file is inert
+            sch, stats, _ = s.live[rel]
+            s.live[rel] = (sch, stats, entry["dv"])
+    s.schema = commit.get("schema", s.schema)
+    if action == "constraint":
+        s.constraints.update(commit.get("set", {}))
+        for name in commit.get("drop", []):
+            s.constraints.pop(name, None)
+    if action in ("rename", "schema") and "mapping" in commit:
+        s.mapping = dict(commit["mapping"])
+    if action == "schema":
+        for col in commit.get("add_columns", []):
+            s.added[col["name"]] = col["type"]
+        for col in commit.get("widen_columns", []):
+            s.widened[col["name"]] = col["type"]
+        for phys in commit.get("drop_columns", []):
+            s.added.pop(phys, None)
+            s.widened.pop(phys, None)
+            s.dropped.add(phys)
+    # append epochs and merge txns are separate namespaces; a merge
+    # committed before the split recorded its txn id as ``batch_id``
+    # (ADVICE r15 #5), which keeps it replay-protected as a merge txn
+    if commit.get("batch_id") is not None:
+        s.batch_ids.add(int(commit["batch_id"]))
+        if action == "merge":
+            s.merge_txn_ids.add(int(commit["batch_id"]))
+    if commit.get("merge_txn_id") is not None:
+        s.merge_txn_ids.add(int(commit["merge_txn_id"]))
+
+
+def _thaw(s: _LogState) -> SimpleNamespace:
+    """A private, mutable copy of *s* for one fold to step."""
+    return SimpleNamespace(
+        **{
+            k: dict(v) if isinstance(v, Mapping)
+            else set(v) if isinstance(v, frozenset)
+            else v
+            for k, v in s._asdict().items()
+        }
+    )
+
+
+def _freeze(w: SimpleNamespace) -> _LogState:
+    return _LogState(
+        **{
+            k: MappingProxyType(v) if isinstance(v, dict)
+            else frozenset(v) if isinstance(v, set)
+            else v
+            for k, v in vars(w).items()
+        }
+    )
+
+
+def _stamp(table_path: str, version: int) -> tuple | None:
+    """Identity of the commit file at *version* (None when absent). A
+    cached state is reused only while this still matches, so a table
+    deleted and recreated at the same path never inherits the old
+    table's state."""
+    try:
+        st = os.stat(_log_path(table_path, version))
+    except FileNotFoundError:
+        return None
+    return (st.st_dev, st.st_ino, st.st_size, st.st_mtime_ns)
+
+
+# abspath -> the newest state folded for that table. Entries are whole
+# immutable states, swapped under the lock (the cache is shared by the
+# driver threads of overlap()); only a newer state replaces an entry,
+# so a fold of a shorter prefix never overwrites a longer one.
+_STATE_CACHE: dict[str, _LogState] = {}
+_STATE_LOCK = threading.Lock()
+
+
+def _cached(table_path: str) -> _LogState | None:
+    """The cached state of *table_path*, if it belongs to this table."""
+    key = os.path.abspath(table_path)
+    s = _STATE_CACHE.get(key)
+    if s is None or _stamp(table_path, s.version) == s.stamp:
+        return s
+    with _STATE_LOCK:
+        if _STATE_CACHE.get(key) is s:
+            del _STATE_CACHE[key]
+    return None
+
+
+def _remember(table_path: str, s: _LogState) -> None:
+    key = os.path.abspath(table_path)
+    if s.stamp is None:
+        return  # the commit vanished under the fold: nothing to check against
+    with _STATE_LOCK:
+        cur = _STATE_CACHE.get(key)
+        if cur is not None and cur.version >= s.version:
+            return
+        if cur is None:
+            # a new table: drop the entries of tables whose directory is
+            # gone (registered queries make a fresh scratch table per
+            # call, so these would otherwise pile up)
+            for k in [
+                k
+                for k in _STATE_CACHE
+                if not os.path.isdir(os.path.join(k, _LOG_DIR))
+            ]:
+                del _STATE_CACHE[k]
+        _STATE_CACHE[key] = s
+
+
+def _state(
+    table_path: str,
+    version: int | None = None,
+    *,
+    since: int | None = None,
+    visit=None,
+    gate: bool = True,
+) -> _LogState:
+    """The table's state at *version* (default: head): the nearest of
+    the cached state, the newest checkpoint and the empty table at or
+    below it, with the commits after it folded on; a newer state than
+    the cached one is published. *visit*, when given, is called as
+    ``visit(v, commit, s)`` for each commit v in (*since*, *version*],
+    with *s* the working state just before v (read it during the call,
+    never keep it) — the fold then starts at or below *since*. *gate*
+    refuses a log this build cannot read (:class:`ProtocolUnsupported`)
+    — the gate guards every read AND write path (writers resolve before
+    staging): a build that cannot read a feature must not commit on top
+    of it either."""
+    if version is None:
+        version = latest_version(table_path)
+    start = version if since is None else since
+    s = _cached(table_path)
+    if s is None or s.version > start:
+        s = _EMPTY
+    if s.version < start:
+        s = _load_checkpoint(table_path, s.version, start) or s
+    if s.version < version:
+        w = _thaw(s)
+        for v in range(s.version + 1, version + 1):
+            commit = _commit(table_path, v)
+            if visit is not None and v > since:
+                visit(v, commit, w)
+            _step(w, commit)
+        w.stamp = _stamp(table_path, version)
+        s = _freeze(w)
+        _remember(table_path, s)
+    if gate:
+        _gate(s, table_path)
+    return s
+
+
+def required_reader_version(
+    table_path: str, version: int | None = None
+) -> int:
+    """The minimum reader version able to correctly resolve the
+    snapshot at *version* (default: head) — the running maximum of the
+    commit prefix's requirements (a feature, once introduced, shapes
+    every later snapshot's live state)."""
+    return _state(table_path, version, gate=False).reader
 
 
 def _resolve(
     table_path: str, version: int
 ) -> tuple[list[tuple[str, dict, str | None]], str, bool]:
-    """Replay commits 0..version (checkpoint-accelerated): ([(rel path,
-    per-file column stats, dv rel | None)], newest schema DDL,
-    evolved?) — ``evolved`` is True when live files were written under
-    MORE THAN ONE schema (the reader must mergeSchema)."""
-    schema, live = _resolve_live(table_path, version)
-    evolved = len({s for s, _, _ in live.values()}) > 1
-    files = [(rel, stats, dv) for rel, (_, stats, dv) in live.items()]
-    return files, schema, evolved
-
-
-def _replay(
-    table_path: str, version: int
-) -> tuple[list[str], str, bool]:
-    """(live data files, newest schema DDL, evolved?) of the snapshot
-    at *version* (the stats-and-DV-blind view of :func:`_resolve`)."""
-    files, schema, evolved = _resolve(table_path, version)
-    return (
-        [os.path.join(table_path, rel) for rel, _, _ in files],
-        schema,
-        evolved,
-    )
+    """([(rel path, per-file column stats, dv rel | None)], newest
+    schema DDL, evolved?) of the snapshot at *version*."""
+    s = _state(table_path, version)
+    return s.files, s.schema, s.evolved
 
 
 def _file_stats(path: str) -> dict:
@@ -572,29 +828,6 @@ def _file_bloom_builder(bloom_cols: tuple[str, ...]):
     return _build
 
 
-def _live_bloom_columns(
-    table_path: str, version: int | None = None
-) -> tuple[str, ...]:
-    """Physical columns ANY live file blooms. Every rewrite path
-    (compact / merge / update images / overwrite) and every later
-    append re-indexes these, so OPTIMIZE or a trickle of writes can
-    never silently shed the table's point-lookup pruning — the bloom
-    property is TABLE-LEVEL once introduced, like Delta's bloom index
-    config. (Ignoring a bloom is always SAFE — performance only — so
-    this is not a protocol-versioned feature.)"""
-    head = latest_version(table_path)
-    if head < 0:
-        return ()
-    v = head if version is None else version
-    files, _, _ = _resolve(table_path, v)
-    cols: set[str] = set()
-    for _, stats, _ in files:
-        for c, st in stats.items():
-            if isinstance(st, dict) and "bloom" in st:
-                cols.add(c)
-    return tuple(sorted(cols))
-
-
 def _publish(
     table_path: str,
     version: int,
@@ -638,6 +871,36 @@ def _maybe_checkpoint(table_path: str, version: int) -> None:
         write_checkpoint(table_path, version)
     except Exception:
         pass
+
+
+def _publish_next(
+    table_path: str,
+    read_version: int,
+    body: dict,
+    checkpoint: bool = False,
+) -> int:
+    """Publish *body* as exactly version read_version + 1 — the rule for
+    read-dependent commits: a commit already in that slot means the
+    writer's read went stale, so :class:`ConcurrentOverwrite` is raised
+    instead of a rebase. *checkpoint* writes a checkpoint right away
+    (the live set may have shrunk); otherwise the _CKPT_EVERY rule
+    applies."""
+    v = read_version + 1
+    try:
+        _create_exclusive(
+            _log_path(table_path, v),
+            json.dumps({"version": v, **body}, sort_keys=True),
+        )
+    except FileExistsError as exc:
+        raise ConcurrentOverwrite(f"version {v} already committed") from exc
+    if not checkpoint:
+        _maybe_checkpoint(table_path, v)
+        return v
+    try:
+        write_checkpoint(table_path, v)
+    except Exception:
+        pass  # accelerator only — never fail the durable commit
+    return v
 
 
 def _commit_with_rebase(
@@ -719,8 +982,7 @@ def _commit_with_rebase(
         if version - 1 > validated_through:
             interleaved = False
             for v in range(validated_through + 1, version):
-                with open(_log_path(table_path, v)) as f:
-                    act = json.load(f).get("action")
+                act = _commit(table_path, v).get("action")
                 if act in ("schema", "rename"):
                     # metadata changed under the staged files — the
                     # physical projection baked into them is stale
@@ -758,32 +1020,26 @@ def tf_append(
     automatically (a blind append is order-independent) up to
     *max_retries* times. *bloom_columns* additionally index the named
     columns with per-file bloom filters for point-lookup skipping."""
-    # blind appends skip snapshot resolution, so gate them here: a
-    # writer that cannot READ a feature (column mapping, widening)
-    # would stage physically-wrong files under it
-    _check_protocol(table_path)
-    _validate_constraints(df, table_path, "append")
-    # pin ALL metadata reads to the version sampled BEFORE staging:
+    # pin ALL metadata reads to one state sampled BEFORE staging:
     # sampling read_version after the stage left a window where a
     # rename/schema commit could land with version <= read_version and
     # escape the interleave scan in _commit_with_rebase — physically
-    # stale files committing silently (ADVICE r15 #2, TOCTOU)
+    # stale files committing silently (ADVICE r15 #2, TOCTOU). The
+    # state's protocol gate matters here too: a writer that cannot
+    # READ a feature (column mapping, widening) would stage
+    # physically-wrong files under it.
     read_version = latest_version(table_path)
+    s = _state(table_path, read_version)
+    _validate_constraints(df, table_path, "append", s)
     logical_df = df
-    mapping = tf_column_mapping(table_path, version=read_version)
-    df = _to_physical_df(
-        df,
-        mapping,
-        _schema_ops(table_path, read_version)[1],
-        _widened(table_path, read_version),
-    )
+    df = _to_physical_df(df, s.mapping, s.dropped, s.widened)
     add, schema = _stage(
         df,
         table_path,
         tuple(
             dict.fromkeys(
-                tuple(mapping.get(c, c) for c in bloom_columns)
-                + _live_bloom_columns(table_path, version=read_version)
+                tuple(s.mapping.get(c, c) for c in bloom_columns)
+                + s.bloom_columns
             )
         ),
     )
@@ -810,21 +1066,11 @@ def tf_overwrite(df: DataFrame, table_path: str) -> int:
     :class:`ConcurrentOverwrite` — never silently rebased, because the
     remove set was computed against the snapshot this writer read."""
     read_version = latest_version(table_path)
-    if read_version >= 0:
-        prior, _, _ = _replay(table_path, read_version)
-        remove = [os.path.relpath(p, table_path) for p in prior]
-    else:
-        remove = []
-    _validate_constraints(df, table_path, "overwrite")
-    df = _to_physical_df(
-        df,
-        tf_column_mapping(table_path),
-        _schema_ops(table_path)[1],
-        _widened(table_path),
-    )
-    add, schema = _stage(
-        df, table_path, _live_bloom_columns(table_path)
-    )
+    s = _state(table_path, read_version)
+    remove = list(s.live)
+    _validate_constraints(df, table_path, "overwrite", s)
+    df = _to_physical_df(df, s.mapping, s.dropped, s.widened)
+    add, schema = _stage(df, table_path, s.bloom_columns)
     return _commit_with_rebase(
         table_path, add, remove, schema, "overwrite", read_version, 0
     )
@@ -854,8 +1100,11 @@ def tf_restore(table_path: str, version: int) -> int:
         raise FileNotFoundError(f"no table at {table_path}")
     if not 0 <= version <= head:
         raise ValueError(f"restore target {version} outside [0, {head}]")
-    target_schema, target_live = _resolve_live(table_path, version)
-    _, cur_live = _resolve_live(table_path, head)
+    # the target first: its fold then seeds the head's when the cache
+    # holds neither, so no commit file is read twice
+    target = _state(table_path, version)
+    cur = _state(table_path, head)
+    target_live, cur_live = target.live, cur.live
     missing = []
     for rel, (_, _, dv) in target_live.items():
         for p in [rel] + ([dv] if dv else []):
@@ -889,26 +1138,14 @@ def tf_restore(table_path: str, version: int) -> int:
     # (ADVICE r13 #2b). Validate exactly the becoming-live delta —
     # re-added files (their target DV applied) plus positions a DV
     # detach un-hides — never the whole snapshot (cost stays O(diff)).
-    cons = tf_constraints(table_path)
-    if cons:
+    if cur.constraints:
         revived_pairs = []
         for act in dv_actions:
             rel = act["path"]
             if rel in {a["path"] for a in adds}:
                 continue  # re-adds validate below with their DV applied
-            want = (
-                set(int(i) for i in _dv_indexes(table_path, act["dv"]))
-                if act["dv"]
-                else set()
-            )
-            have = (
-                set(
-                    int(i)
-                    for i in _dv_indexes(table_path, act["prev_dv"])
-                )
-                if act["prev_dv"]
-                else set()
-            )
+            want = _dv_set(table_path, act["dv"])
+            have = _dv_set(table_path, act["prev_dv"])
             if have - want:
                 revived_pairs.append((rel, sorted(have - want)))
         if adds or revived_pairs:
@@ -918,13 +1155,12 @@ def tf_restore(table_path: str, version: int) -> int:
                     "tf_restore needs an active SparkSession to "
                     "validate CHECK constraints over resurrected rows"
                 )
-            widen_now = _widened(table_path, head)
             rs = (
                 _union_schema_of(
                     (fsch for fsch, _, _ in target_live.values()),
-                    widen_now,
+                    cur.widened,
                 )
-                if widen_now
+                if cur.widened
                 else None
             )
             frames = []
@@ -953,41 +1189,23 @@ def tf_restore(table_path: str, version: int) -> int:
                     fr, allowMissingColumns=True
                 )
             _validate_constraints(
-                _to_logical_df(
-                    becoming_live, tf_column_mapping(table_path)
-                ),
+                _to_logical_df(becoming_live, cur.mapping),
                 table_path,
                 "restore",
+                cur,
             )
-    payload = json.dumps(
-        {
-            "version": head + 1,
-            "action": "restore",
-            "restored_version": version,
-            "add": adds,
-            "remove": remove,
-            "dv": dv_actions,
-            "schema": target_schema,
-            **(
-                {"min_reader_version": _FEATURE_DV}
-                if dv_actions
-                else {}
-            ),
-        },
-        sort_keys=True,
-    )
-    path = _log_path(table_path, head + 1)
-    try:
-        _create_exclusive(path, payload)
-    except FileExistsError as exc:
-        raise ConcurrentOverwrite(
-            f"version {head + 1} already committed"
-        ) from exc
-    try:  # the live set may have shrunk — same hook as overwrite
-        write_checkpoint(table_path, head + 1)
-    except Exception:
-        pass
-    return head + 1
+    body = {
+        "action": "restore",
+        "restored_version": version,
+        "add": adds,
+        "remove": remove,
+        "dv": dv_actions,
+        "schema": target.schema,
+    }
+    if dv_actions:
+        body["min_reader_version"] = _FEATURE_DV
+    # the live set may have shrunk — same hook as overwrite
+    return _publish_next(table_path, head, body, checkpoint=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1011,48 +1229,32 @@ class ConstraintViolation(Exception):
     fail a CHECK constraint."""
 
 
-# table path -> (next unscanned version, constraints so far) — commits
-# are immutable, so the scanned prefix never changes (the
-# committed_batch_ids cache discipline)
-_CONSTRAINT_CACHE: dict[str, tuple[int, dict[str, str]]] = {}
-
-
 def tf_constraints(table_path: str) -> dict[str, str]:
     """The table's active CHECK constraints ({name: sql expr}) at the
     current head, replayed from the log's constraint commits."""
-    head = latest_version(table_path)
-    cached = _CONSTRAINT_CACHE.get(table_path)
-    if cached and cached[0] <= head + 1:
-        start, cons = cached[0], dict(cached[1])
-    else:
-        start, cons = 0, {}
-    for v in range(start, head + 1):
-        with open(_log_path(table_path, v)) as f:
-            commit = json.load(f)
-        if commit.get("action") == "constraint":
-            cons.update(commit.get("set", {}))
-            for name in commit.get("drop", []):
-                cons.pop(name, None)
-    _CONSTRAINT_CACHE[table_path] = (head + 1, dict(cons))
-    return cons
+    return dict(_state(table_path, gate=False).constraints)
 
 
 def _validate_constraints(
-    df: DataFrame, table_path: str, action: str
+    df: DataFrame,
+    table_path: str,
+    action: str,
+    s: _LogState | None = None,
 ) -> None:
+    """Raise :class:`ConstraintViolation` when a row of *df* fails a
+    CHECK constraint of state *s* (default: the head's)."""
     import pyspark.sql.functions as F
 
-    if latest_version(table_path) < 0:
-        return
-    cons = tf_constraints(table_path)
+    if s is None:
+        s = _state(table_path, gate=False)
+    cons = s.constraints
     if not cons:
         return
     # a batch written before an ADD COLUMN may lack the new column a
     # constraint references — it lands as NULL, so validate it as NULL
-    added, _ = _schema_ops(table_path)
-    if added:
-        inv = {p: l for l, p in tf_column_mapping(table_path).items()}
-        for phys, typ in added.items():
+    if s.added:
+        inv = {p: l for l, p in s.mapping.items()}
+        for phys, typ in s.added.items():
             logical = inv.get(phys, phys)
             if logical not in df.columns:
                 df = df.withColumn(logical, F.lit(None).cast(typ))
@@ -1088,25 +1290,11 @@ def _publish_constraint_commit(
             f"constraint validated at version {expected_head} but "
             f"head is {head}"
         )
-    body = json.dumps(
-        {
-            "version": head + 1,
-            "action": "constraint",
-            "add": [],
-            "remove": [],
-            **payload,
-        },
-        sort_keys=True,
+    return _publish_next(
+        table_path,
+        head,
+        {"action": "constraint", "add": [], "remove": [], **payload},
     )
-    path = _log_path(table_path, head + 1)
-    try:
-        _create_exclusive(path, body)
-    except FileExistsError as exc:
-        raise ConcurrentOverwrite(
-            f"version {head + 1} already committed"
-        ) from exc
-    _maybe_checkpoint(table_path, head + 1)
-    return head + 1
 
 
 def tf_set_constraint(
@@ -1158,11 +1346,6 @@ def tf_drop_constraint(table_path: str, name: str) -> int:
 # rename. Time travel shows each version under ITS OWN mapping.
 # ---------------------------------------------------------------------------
 
-# table path -> (next unscanned version, mapping) — same incremental
-# cache discipline as constraints/batch ids (commits are immutable)
-_MAPPING_CACHE: dict[str, tuple[int, dict[str, str]]] = {}
-
-
 def tf_column_mapping(
     table_path: str, version: int | None = None
 ) -> dict[str, str]:
@@ -1171,31 +1354,7 @@ def tf_column_mapping(
     ``rename`` commits and ``schema`` commits (ADD COLUMN re-using a
     retired name gets a FRESH physical name, Delta's column-mapping
     id discipline) can replace the mapping."""
-    head = latest_version(table_path)
-    v = head if version is None else version
-    if version is None:
-        cached = _MAPPING_CACHE.get(table_path)
-        start, mapping = (
-            (cached[0], dict(cached[1])) if cached else (0, {})
-        )
-        for w in range(start, head + 1):
-            with open(_log_path(table_path, w)) as f:
-                commit = json.load(f)
-            if commit.get("action") in ("rename", "schema") and (
-                "mapping" in commit
-            ):
-                mapping = dict(commit["mapping"])
-        _MAPPING_CACHE[table_path] = (head + 1, dict(mapping))
-        return mapping
-    mapping: dict[str, str] = {}
-    for w in range(0, v + 1):
-        with open(_log_path(table_path, w)) as f:
-            commit = json.load(f)
-        if commit.get("action") in ("rename", "schema") and (
-            "mapping" in commit
-        ):
-            mapping = dict(commit["mapping"])
-    return mapping
+    return dict(_state(table_path, version, gate=False).mapping)
 
 
 def _to_physical_df(
@@ -1280,10 +1439,9 @@ def tf_rename_column(table_path: str, old: str, new: str) -> int:
     head = latest_version(table_path)
     if head < 0:
         raise FileNotFoundError(f"no table at {table_path}")
-    mapping = tf_column_mapping(table_path)
-    physical_cols = _live_physical_columns(table_path, head)
-    inv = {p: l for l, p in mapping.items()}
-    logical_cols = [inv.get(p, p) for p in physical_cols]
+    s = _state(table_path, head)
+    mapping = s.mapping
+    logical_cols = s.logical_columns
     if old not in logical_cols:
         raise ValueError(
             f"no column {old!r} (logical columns: {logical_cols})"
@@ -1292,7 +1450,7 @@ def tf_rename_column(table_path: str, old: str, new: str) -> int:
         raise ValueError(f"column {new!r} already exists")
     import re as _re
 
-    for cname, cexpr in tf_constraints(table_path).items():
+    for cname, cexpr in s.constraints.items():
         # constraint expressions speak LOGICAL names; renaming a
         # column out from under one would break every later write's
         # validation (Delta's rule: drop the constraint first)
@@ -1305,26 +1463,17 @@ def tf_rename_column(table_path: str, old: str, new: str) -> int:
     mapping = {l: p for l, p in mapping.items() if l != old}
     if new != phys:
         mapping[new] = phys
-    body = json.dumps(
+    return _publish_next(
+        table_path,
+        head,
         {
-            "version": head + 1,
             "action": "rename",
             "add": [],
             "remove": [],
             "mapping": mapping,
             "min_reader_version": _FEATURE_COLUMN_METADATA,
         },
-        sort_keys=True,
     )
-    path = _log_path(table_path, head + 1)
-    try:
-        _create_exclusive(path, body)
-    except FileExistsError as exc:
-        raise ConcurrentOverwrite(
-            f"version {head + 1} already committed"
-        ) from exc
-    _maybe_checkpoint(table_path, head + 1)
-    return head + 1
 
 
 def _split_ddl_fields(ddl: str) -> list[str]:
@@ -1367,34 +1516,9 @@ def _split_ddl_fields(ddl: str) -> list[str]:
 #
 # Scale shape: both DDLs are one tiny JSON commit — O(1) regardless of
 # table size; the read-side cost is a projection/NULL-fill expression,
-# not I/O. The replay below is O(commits) over the in-memory log,
-# identical to the mapping/constraint replays.
+# not I/O. The ADD/DROP/widen state is folded by _step with the rest of
+# the log state.
 # ---------------------------------------------------------------------------
-
-
-def _schema_ops(
-    table_path: str, version: int | None = None
-) -> tuple[dict[str, str], set[str]]:
-    """Replay ``schema`` commits ≤ *version* (default head):
-    (added {physical name: type, in add order}, dropped physical
-    names). A column added then dropped moves from the first to the
-    second; fresh physical names never collide with tombstones by
-    construction."""
-    head = latest_version(table_path)
-    v = head if version is None else version
-    added: dict[str, str] = {}
-    dropped: set[str] = set()
-    for w in range(0, v + 1):
-        with open(_log_path(table_path, w)) as f:
-            commit = json.load(f)
-        if commit.get("action") != "schema":
-            continue
-        for col in commit.get("add_columns", []):
-            added[col["name"]] = col["type"]
-        for phys in commit.get("drop_columns", []):
-            added.pop(phys, None)
-            dropped.add(phys)
-    return added, dropped
 
 
 def _apply_schema_ops_physical(
@@ -1437,26 +1561,6 @@ _WIDEN_OK = (
     | {("float", "double")}
     | {(a, "double") for a in ("tinyint", "smallint", "int")}
 )
-
-
-def _widened(
-    table_path: str, version: int | None = None
-) -> dict[str, str]:
-    """Replay ``widen_columns`` payloads ≤ *version*: the physical
-    column's CURRENT (widest) type. Later widens override earlier."""
-    head = latest_version(table_path)
-    v = head if version is None else version
-    out: dict[str, str] = {}
-    for w in range(0, v + 1):
-        with open(_log_path(table_path, w)) as f:
-            commit = json.load(f)
-        if commit.get("action") != "schema":
-            continue
-        for col in commit.get("widen_columns", []):
-            out[col["name"]] = col["type"]
-        for phys in commit.get("drop_columns", []):
-            out.pop(phys, None)
-    return out
 
 
 def _type_rank(t: str) -> tuple[int, int]:
@@ -1519,32 +1623,6 @@ def _union_schema_of(
     return ", ".join(f"`{n}` {types[n]}" for n in order)
 
 
-def _wide_read_schema(
-    table_path: str, version: int, widened: dict[str, str]
-) -> str:
-    """Explicit read schema for a widened SNAPSHOT (its live files)."""
-    _, live = _resolve_live(table_path, version)
-    return _union_schema_of(
-        (fsch for fsch, _, _ in live.values()), widened
-    )
-
-
-def _file_schemas(table_path: str, version: int) -> dict[str, str]:
-    """{rel: writer schema DDL} for every file ever added ≤ *version*
-    (dead files included — the change feed reads them)."""
-    out: dict[str, str] = {}
-    schema = ""
-    for v in range(version + 1):
-        with open(_log_path(table_path, v)) as f:
-            commit = json.load(f)
-        sch = commit.get("schema", schema)
-        for e in commit.get("add", []):
-            fsch = e.get("schema", sch) if isinstance(e, dict) else sch
-            out[_add_path(e)] = fsch
-        schema = sch
-    return out
-
-
 def tf_widen_column(table_path: str, name: str, to_type: str) -> int:
     """ALTER COLUMN <name> TYPE <to_type> — metadata-only type
     WIDENING (Delta's type widening): not one data file is rewritten;
@@ -1557,22 +1635,17 @@ def tf_widen_column(table_path: str, name: str, to_type: str) -> int:
     head = latest_version(table_path)
     if head < 0:
         raise FileNotFoundError(f"no table at {table_path}")
-    mapping = tf_column_mapping(table_path)
-    phys = mapping.get(name, name)
-    phys_live = _live_physical_columns(table_path, head)
-    if phys not in phys_live:
-        inv = {p: l for l, p in mapping.items()}
+    s = _state(table_path, head)
+    phys = s.mapping.get(name, name)
+    if phys not in s.physical_columns:
         raise ValueError(
-            f"no column {name!r} (logical columns: "
-            f"{[inv.get(p, p) for p in phys_live]})"
+            f"no column {name!r} (logical columns: {s.logical_columns})"
         )
     # current type: widest occurrence across live files + prior ops
-    added, _ = _schema_ops(table_path, head)
-    cur = added.get(phys) or _widened(table_path, head).get(phys)
+    cur = s.added.get(phys) or s.widened.get(phys)
     if cur is None:
-        _, live = _resolve_live(table_path, head)
         best = None
-        for fsch, _, _ in live.values():
+        for fsch, _, _ in s.live.values():
             for field in _split_ddl_fields(fsch):
                 n, typ = field.split(" ", 1)
                 if n.strip("`") == phys and (
@@ -1589,7 +1662,6 @@ def tf_widen_column(table_path: str, name: str, to_type: str) -> int:
             f"{sorted(t for f, t in _WIDEN_OK if f == cur)})"
         )
     payload = {
-        "version": head + 1,
         "action": "schema",
         "add": [],
         "remove": [],
@@ -1598,25 +1670,6 @@ def tf_widen_column(table_path: str, name: str, to_type: str) -> int:
         "widen_columns": [{"name": phys, "type": to_type}],
     }
     return _publish_schema_commit(table_path, head, payload)
-
-
-def _live_physical_columns(table_path: str, version: int) -> list[str]:
-    """Physical column names at *version*: the union of the live
-    files' writer schemas plus declared adds, minus tombstones —
-    the honest source of the table's schema (the newest commit's DDL
-    alone can lag behind an evolved live set)."""
-    _, live = _resolve_live(table_path, version)
-    seen: list[str] = []
-    for fsch, _, _ in live.values():
-        for field in _split_ddl_fields(fsch):
-            name = field.split(" ", 1)[0].strip("`")
-            if name not in seen:
-                seen.append(name)
-    added, dropped = _schema_ops(table_path, version)
-    for phys in added:
-        if phys not in seen:
-            seen.append(phys)
-    return [c for c in seen if c not in dropped]
 
 
 def tf_add_column(table_path: str, name: str, dtype: str) -> int:
@@ -1630,22 +1683,20 @@ def tf_add_column(table_path: str, name: str, dtype: str) -> int:
     head = latest_version(table_path)
     if head < 0:
         raise FileNotFoundError(f"no table at {table_path}")
-    mapping = tf_column_mapping(table_path)
-    added, dropped = _schema_ops(table_path, head)
-    phys_live = _live_physical_columns(table_path, head)
-    inv = {p: l for l, p in mapping.items()}
-    logical_cols = [inv.get(p, p) for p in phys_live]
-    if name in logical_cols:
+    s = _state(table_path, head)
+    if name in s.logical_columns:
         raise ValueError(f"column {name!r} already exists")
     ever_phys = (
-        set(phys_live) | set(added) | dropped | set(mapping.values())
+        set(s.physical_columns)
+        | set(s.added)
+        | s.dropped
+        | set(s.mapping.values())
     )
     phys = name if name not in ever_phys else f"{name}__v{head + 1}"
-    new_mapping = dict(mapping)
+    new_mapping = dict(s.mapping)
     if phys != name:
         new_mapping[name] = phys
     payload = {
-        "version": head + 1,
         "action": "schema",
         "add": [],
         "remove": [],
@@ -1666,10 +1717,9 @@ def tf_drop_column(table_path: str, name: str) -> int:
     head = latest_version(table_path)
     if head < 0:
         raise FileNotFoundError(f"no table at {table_path}")
-    mapping = tf_column_mapping(table_path)
-    phys_live = _live_physical_columns(table_path, head)
-    inv = {p: l for l, p in mapping.items()}
-    logical_cols = [inv.get(p, p) for p in phys_live]
+    s = _state(table_path, head)
+    mapping = s.mapping
+    logical_cols = s.logical_columns
     if name not in logical_cols:
         raise ValueError(
             f"no column {name!r} (logical columns: {logical_cols})"
@@ -1678,7 +1728,7 @@ def tf_drop_column(table_path: str, name: str) -> int:
         raise ValueError("cannot drop the last column")
     import re as _re
 
-    for cname, cexpr in tf_constraints(table_path).items():
+    for cname, cexpr in s.constraints.items():
         if _re.search(rf"\b{_re.escape(name)}\b", cexpr):
             raise ValueError(
                 f"constraint {cname!r} references {name!r}: drop it "
@@ -1687,7 +1737,6 @@ def tf_drop_column(table_path: str, name: str) -> int:
     phys = mapping.get(name, name)
     new_mapping = {l: p for l, p in mapping.items() if l != name}
     payload = {
-        "version": head + 1,
         "action": "schema",
         "add": [],
         "remove": [],
@@ -1707,16 +1756,7 @@ def _publish_schema_commit(
         if payload.get("widen_columns")
         else _FEATURE_COLUMN_METADATA,
     )
-    body = json.dumps(payload, sort_keys=True)
-    path = _log_path(table_path, head + 1)
-    try:
-        _create_exclusive(path, body)
-    except FileExistsError as exc:
-        raise ConcurrentOverwrite(
-            f"version {head + 1} already committed"
-        ) from exc
-    _maybe_checkpoint(table_path, head + 1)
-    return head + 1
+    return _publish_next(table_path, head, payload)
 
 
 # ---------------------------------------------------------------------------
@@ -1756,6 +1796,73 @@ def _dv_write(table_path: str, indexes) -> str:
         f.write(_struct.pack("<q", len(arr)))
         f.write(arr.tobytes())
     return rel
+
+
+def _dv_set(table_path: str, dv_rel: str | None) -> set[int]:
+    """Row indexes of a sidecar as a set; no sidecar hides nothing."""
+    if not dv_rel:
+        return set()
+    return set(int(i) for i in _dv_indexes(table_path, dv_rel))
+
+
+def _dv_diffs(
+    table_path: str, commit: dict, skip=()
+) -> tuple[list, list]:
+    """([(rel, newly hidden positions)], [(rel, revealed positions)])
+    of a commit's ``dv`` actions, files in *skip* left out."""
+    hidden, revealed = [], []
+    for e in commit.get("dv", []):
+        if e["path"] in skip:
+            continue
+        new = _dv_set(table_path, e["dv"])
+        prev = _dv_set(table_path, e.get("prev_dv"))
+        if new - prev:
+            hidden.append((e["path"], sorted(new - prev)))
+        if prev - new:
+            revealed.append((e["path"], sorted(prev - new)))
+    return hidden, revealed
+
+
+def _unhidden(
+    spark: SparkSession, matched: DataFrame, old: dict[str, set[int]]
+) -> DataFrame:
+    """*matched* — file rows tagged ``__dv_file`` / ``__dv_idx`` —
+    minus the positions *old* ({rel: positions its DV hides}) already
+    hides (a row cannot be deleted or updated twice)."""
+    import pyspark.sql.functions as F
+
+    if not old:
+        return matched
+    return matched.join(
+        F.broadcast(
+            _positions_df(spark, [(r, sorted(p)) for r, p in old.items()])
+        ),
+        ["__dv_file", "__dv_idx"],
+        "left_anti",
+    )
+
+
+def _dv_actions(
+    table_path: str,
+    cand: list[tuple[str, dict, str | None]],
+    old: dict[str, set[int]],
+    pairs: list[tuple[str, list]],
+) -> list[dict]:
+    """One ``dv`` action per (file, newly hidden positions): a new
+    sidecar holding the file's old DV ∪ the new positions."""
+    prev = {rel: dv for rel, _, dv in cand}
+    actions = []
+    for rel, idxs in pairs:
+        merged = sorted(old.get(rel, set()) | set(idxs))
+        actions.append(
+            {
+                "path": rel,
+                "dv": _dv_write(table_path, merged),
+                "prev_dv": prev[rel],
+                "cardinality": len(merged),
+            }
+        )
+    return actions
 
 
 def _dv_indexes(table_path: str, dv_rel: str):
@@ -1812,6 +1919,24 @@ def _snapshot_struct(schema: str | None):
     return dt if isinstance(dt, StructType) else None
 
 
+def _reader(
+    spark: SparkSession,
+    evolved: bool,
+    read_schema: str | None,
+    snapshot_schema: str | None,
+):
+    """The parquet reader for a set of live files: the explicit read
+    schema when given, else mergeSchema across writer generations,
+    else the log's own schema (skipping footer inference)."""
+    reader = spark.read
+    if read_schema is not None:
+        return reader.schema(read_schema)
+    if evolved:
+        return reader.option("mergeSchema", "true")
+    snap = _snapshot_struct(snapshot_schema)
+    return reader if snap is None else reader.schema(snap)
+
+
 def _read_entries(
     spark: SparkSession,
     table_path: str,
@@ -1834,16 +1959,7 @@ def _read_entries(
     issue dozens)."""
     import pyspark.sql.functions as F
 
-    reader = spark.read
-    if read_schema is not None:
-        reader = reader.schema(read_schema)
-    elif evolved:
-        reader = reader.option("mergeSchema", "true")
-    else:
-        snap = _snapshot_struct(snapshot_schema)
-        if snap is not None:
-            reader = reader.schema(snap)
-    df = reader.parquet(
+    df = _reader(spark, evolved, read_schema, snapshot_schema).parquet(
         *(os.path.join(table_path, rel) for rel, _, _ in entries)
     )
     dvd = [(rel, dv) for rel, _, dv in entries if dv]
@@ -1872,6 +1988,48 @@ def _read_entries(
     )
 
 
+def _scan(
+    spark: SparkSession,
+    table_path: str,
+    s: _LogState,
+    entries: list[tuple[str, dict, str | None]],
+) -> DataFrame:
+    """The PHYSICAL rows of *entries* (live files of state *s*) as of
+    *s*: deletion vectors applied, dropped columns projected out, added
+    ones NULL-filled, widened ones cast up. No entries: an empty frame
+    of the snapshot schema."""
+    if entries:
+        df = _read_entries(
+            spark,
+            table_path,
+            entries,
+            s.evolved,
+            read_schema=s.read_schema,
+            snapshot_schema=s.schema,
+        )
+    else:
+        df = spark.createDataFrame([], s.schema)
+    return _apply_schema_ops_physical(df, s.added, s.dropped, s.widened)
+
+
+def _filter(df: DataFrame, predicates: list[tuple]) -> DataFrame:
+    """*df* filtered by a conjunction of (column, op, literal)."""
+    import pyspark.sql.functions as F
+
+    for col, op, val in predicates:
+        c = F.col(col)
+        df = df.filter(
+            {
+                "=": c == val,
+                "<": c < val,
+                "<=": c <= val,
+                ">": c > val,
+                ">=": c >= val,
+            }[op]
+        )
+    return df
+
+
 def tf_delete(
     spark: SparkSession,
     table_path: str,
@@ -1898,10 +2056,9 @@ def tf_delete(
     read_version = latest_version(table_path)
     if read_version < 0:
         raise FileNotFoundError(f"no table at {table_path}")
-    predicates = _phys_predicates(
-        predicates, tf_column_mapping(table_path, version=read_version)
-    )
-    files, schema, evolved = _resolve(table_path, read_version)
+    s = _state(table_path, read_version)
+    predicates = _phys_predicates(predicates, s.mapping)
+    files = s.files
     cand = [
         (rel, stats, dv)
         for rel, stats, dv in files
@@ -1910,49 +2067,20 @@ def tf_delete(
     skipped = len(files) - len(cand)
     if not cand:
         return read_version, 0, 0, skipped
-    widened = _widened(table_path, read_version)
-    reader = spark.read
-    if widened:
-        reader = reader.schema(
-            _wide_read_schema(table_path, read_version, widened)
-        )
-    elif evolved:
-        reader = reader.option("mergeSchema", "true")
-    else:
-        # the log knows the snapshot schema — skip footer inference
-        _snap = _snapshot_struct(schema)
-        if _snap is not None:
-            reader = reader.schema(_snap)
-    scan = reader.parquet(
-        *(os.path.join(table_path, rel) for rel, _, _ in cand)
+    scan = _filter(
+        _reader(spark, s.evolved, s.read_schema, s.schema).parquet(
+            *(os.path.join(table_path, rel) for rel, _, _ in cand)
+        ),
+        predicates,
     )
-    for col, op, val in predicates:
-        c = F.col(col)
-        scan = scan.filter(
-            {
-                "=": c == val,
-                "<": c < val,
-                "<=": c <= val,
-                ">": c > val,
-                ">=": c >= val,
-            }[op]
-        )
     matched = scan.select(
         F.regexp_extract(
             F.col("_metadata.file_path"), _DV_KEY_RE, 1
         ).alias("__dv_file"),
         F.col("_metadata.row_index").alias("__dv_idx"),
     )
-    old: dict[str, list[int]] = {}
-    old_rel: dict[str, str | None] = {rel: dv for rel, _, dv in cand}
-    for rel, _, dv in cand:
-        if dv:
-            old[rel] = [int(i) for i in _dv_indexes(table_path, dv)]
-    if old:
-        old_df = _positions_df(spark, list(old.items()))
-        matched = matched.join(
-            F.broadcast(old_df), ["__dv_file", "__dv_idx"], "left_anti"
-        )
+    old = {rel: _dv_set(table_path, dv) for rel, _, dv in cand if dv}
+    matched = _unhidden(spark, matched, old)
     # per-file new positions: grouped collect of a cardinality-bounded
     # set (the DV contract) — file count × mean-DV-size rows total
     grouped = (
@@ -1962,45 +2090,31 @@ def tf_delete(
     )
     if not grouped:
         return read_version, 0, len(cand), skipped
-    dv_actions = []
-    for row in grouped:
-        rel = row["__dv_file"]
-        merged = sorted(set(old.get(rel, [])) | set(row["idxs"]))
-        dv_actions.append(
-            {
-                "path": rel,
-                "dv": _dv_write(table_path, merged),
-                "prev_dv": old_rel.get(rel),
-                "cardinality": len(merged),
-            }
-        )
+    dv_actions = _dv_actions(
+        table_path,
+        cand,
+        old,
+        [(r["__dv_file"], r["idxs"]) for r in grouped],
+    )
     head = latest_version(table_path)
     if head != read_version:
         raise ConcurrentOverwrite(
             f"delete read version {read_version} but head is {head}"
         )
-    payload = json.dumps(
+    version = _publish_next(
+        table_path,
+        read_version,
         {
-            "version": read_version + 1,
             "action": "delete",
             "add": [],
             "remove": [],
             "dv": dv_actions,
-            "schema": schema,
+            "schema": s.schema,
             "min_reader_version": _FEATURE_DV,
         },
-        sort_keys=True,
     )
-    path = _log_path(table_path, read_version + 1)
-    try:
-        _create_exclusive(path, payload)
-    except FileExistsError as exc:
-        raise ConcurrentOverwrite(
-            f"version {read_version + 1} already committed"
-        ) from exc
-    _maybe_checkpoint(table_path, read_version + 1)
     return (
-        read_version + 1,
+        version,
         len(dv_actions),
         len(cand) - len(dv_actions),
         skipped,
@@ -2035,31 +2149,19 @@ def tf_update(
     read_version = latest_version(table_path)
     if read_version < 0:
         raise FileNotFoundError(f"no table at {table_path}")
-    mapping = tf_column_mapping(table_path, version=read_version)
-    added, dropped = _schema_ops(table_path, read_version)
-    widened = _widened(table_path, read_version)
+    s = _state(table_path, read_version)
+    mapping, added, dropped, widened = (
+        s.mapping, s.added, s.dropped, s.widened
+    )
     predicates = _phys_predicates(predicates, mapping)
-    files, schema, evolved = _resolve(table_path, read_version)
     cand = [
         (rel, stats, dv)
-        for rel, stats, dv in files
+        for rel, stats, dv in s.files
         if _file_survives(stats, predicates)
     ]
     if not cand:
         return read_version, 0, 0
-    reader = spark.read
-    if widened:
-        reader = reader.schema(
-            _wide_read_schema(table_path, read_version, widened)
-        )
-    elif evolved:
-        reader = reader.option("mergeSchema", "true")
-    else:
-        # the log knows the snapshot schema — skip footer inference
-        _snap = _snapshot_struct(schema)
-        if _snap is not None:
-            reader = reader.schema(_snap)
-    scan = reader.parquet(
+    scan = _reader(spark, s.evolved, s.read_schema, s.schema).parquet(
         *(os.path.join(table_path, rel) for rel, _, _ in cand)
     )
     inv = {p: l for l, p in mapping.items()}
@@ -2071,17 +2173,7 @@ def tf_update(
     bad = [c for c in set_exprs if c not in logical_cols]
     if bad:
         raise ValueError(f"SET targets unknown column(s) {bad}")
-    for col, op, val in predicates:
-        c = F.col(col)
-        scan = scan.filter(
-            {
-                "=": c == val,
-                "<": c < val,
-                "<=": c <= val,
-                ">": c > val,
-                ">=": c >= val,
-            }[op]
-        )
+    scan = _filter(scan, predicates)
     # ONE fused candidate scan (VERDICT r13 #6): the matched frame
     # carries the row VALUES alongside (file, position), so the
     # position collect and the image rewrite share a single pass —
@@ -2095,16 +2187,8 @@ def tf_update(
         ).alias("__dv_file"),
         F.col("_metadata.row_index").alias("__dv_idx"),
     )
-    old: dict[str, list[int]] = {}
-    old_rel: dict[str, str | None] = {rel: dv for rel, _, dv in cand}
-    for rel, _, dv in cand:
-        if dv:
-            old[rel] = [int(i) for i in _dv_indexes(table_path, dv)]
-    if old:
-        old_df = _positions_df(spark, list(old.items()))
-        matched = matched.join(
-            F.broadcast(old_df), ["__dv_file", "__dv_idx"], "left_anti"
-        )
+    old = {rel: _dv_set(table_path, dv) for rel, _, dv in cand if dv}
+    matched = _unhidden(spark, matched, old)
     # matched rows are cardinality-bounded (the DV contract); persist
     # so the position collect and the staged write reuse one scan
     matched = matched.persist()
@@ -2138,7 +2222,7 @@ def tf_update(
         dtypes = {f.name: f.dataType for f in updated.schema.fields}
         for name, expr in set_exprs.items():
             updated = updated.withColumn(name, expr.cast(dtypes[name]))
-        _validate_constraints(updated, table_path, "update")
+        _validate_constraints(updated, table_path, "update", s)
         # keep the STAGED frame's schema for the commit: the images
         # can carry columns the pre-update DDL lacks (SET on an added
         # column), and recording them under the old writer schema
@@ -2147,51 +2231,27 @@ def tf_update(
         add, schema = _stage(
             _to_physical_df(updated, mapping, dropped, widened),
             table_path,
-            _live_bloom_columns(table_path, read_version),
+            s.bloom_columns,
         )
     finally:
         matched.unpersist()
-    dv_actions = []
-    for rel, idxs in pairs:
-        merged = sorted(set(old.get(rel, [])) | set(idxs))
-        dv_actions.append(
-            {
-                "path": rel,
-                "dv": _dv_write(table_path, merged),
-                "prev_dv": old_rel.get(rel),
-                "cardinality": len(merged),
-            }
-        )
+    dv_actions = _dv_actions(table_path, cand, old, pairs)
     head = latest_version(table_path)
     if head != read_version:
         raise ConcurrentOverwrite(
             f"update read version {read_version} but head is {head}"
         )
-    payload = json.dumps(
-        {
-            "version": read_version + 1,
-            "action": "update",
-            "add": add,
-            "remove": [],
-            "dv": dv_actions,
-            "schema": schema,
-            **(
-                {"min_reader_version": _FEATURE_DV}
-                if dv_actions
-                else {}
-            ),
-        },
-        sort_keys=True,
-    )
-    path = _log_path(table_path, read_version + 1)
-    try:
-        _create_exclusive(path, payload)
-    except FileExistsError as exc:
-        raise ConcurrentOverwrite(
-            f"version {read_version + 1} already committed"
-        ) from exc
-    _maybe_checkpoint(table_path, read_version + 1)
-    return read_version + 1, len(dv_actions), n_updated
+    body = {
+        "action": "update",
+        "add": add,
+        "remove": [],
+        "dv": dv_actions,
+        "schema": schema,
+    }
+    if dv_actions:
+        body["min_reader_version"] = _FEATURE_DV
+    version = _publish_next(table_path, read_version, body)
+    return version, len(dv_actions), n_updated
 
 
 def tf_read(
@@ -2207,43 +2267,13 @@ def tf_read(
     v = head if version is None else version
     if not 0 <= v <= head:
         raise ValueError(f"version {v} outside [0, {head}]")
-    files, schema, evolved = _resolve(table_path, v)
     # time travel shows the version under ITS OWN column mapping and
-    # its own ADD/DROP state
-    mapping = tf_column_mapping(table_path, version=v)
-    added, dropped = _schema_ops(table_path, v)
-    widened = _widened(table_path, v)
-    if not files:
-        return _to_logical_df(
-            _apply_schema_ops_physical(
-                spark.createDataFrame([], schema), added, dropped,
-                widened,
-            ),
-            mapping,
-        )
-    # live files span >1 writer schema: union them by name with
-    # NULL-fill for columns a generation lacks (Delta/Iceberg
-    # schema evolution; same contract as io_schema_evolution)
-    return _to_logical_df(
-        _apply_schema_ops_physical(
-            _read_entries(
-                spark,
-                table_path,
-                files,
-                evolved,
-                read_schema=(
-                    _wide_read_schema(table_path, v, widened)
-                    if widened
-                    else None
-                ),
-                snapshot_schema=schema,
-            ),
-            added,
-            dropped,
-            widened,
-        ),
-        mapping,
-    )
+    # its own ADD/DROP state; live files spanning >1 writer schema
+    # union by name with NULL-fill for columns a generation lacks
+    # (Delta/Iceberg schema evolution; same contract as
+    # io_schema_evolution)
+    s = _state(table_path, v)
+    return _to_logical_df(_scan(spark, table_path, s, s.files), s.mapping)
 
 
 # ---------------------------------------------------------------------------
@@ -2317,12 +2347,9 @@ def tf_pruned_files(
     for col, op, _ in predicates:
         if op not in _OPS:
             raise ValueError(f"unsupported skipping op {op!r} on {col}")
-    head = latest_version(table_path)
-    v = head if version is None else version
-    predicates = _phys_predicates(
-        predicates, tf_column_mapping(table_path, version=v)
-    )
-    files, _, _ = _resolve(table_path, v)
+    s = _state(table_path, version)
+    predicates = _phys_predicates(predicates, s.mapping)
+    files = s.files
 
     def _eff(stats: dict) -> dict:
         if not ignore_bloom:
@@ -2352,16 +2379,9 @@ def tf_pruned_counts(
     tf_pruned_files once per probed value re-replays the snapshot's
     metadata once per value; the skipping decision itself only needs
     the live stats list once."""
-    head = latest_version(table_path)
-    v = head if version is None else version
-    values = list(values)
-    if not values:
-        files, _, _ = _resolve(table_path, v)
-        return {}, len(files)
-    pcol = _phys_predicates(
-        [(col, "=", values[0])], tf_column_mapping(table_path, version=v)
-    )[0][0]
-    files, _, _ = _resolve(table_path, v)
+    s = _state(table_path, version)
+    files = s.files
+    pcol = s.mapping.get(col, col)
     counts = {
         val: sum(
             1
@@ -2385,50 +2405,19 @@ def tf_scan(
     as real Spark filters (skipping is a performance lever, the filter
     is the truth; a file kept by conservative stats still drops its
     non-matching rows in the scan)."""
-    import pyspark.sql.functions as F
-
     head = latest_version(table_path)
     if head < 0:
         raise FileNotFoundError(f"no table at {table_path}")
-    v = head if version is None else version
-    mapping = tf_column_mapping(table_path, version=v)
-    added, dropped = _schema_ops(table_path, v)
-    widened = _widened(table_path, v)
-    predicates = _phys_predicates(predicates, mapping)
-    files, schema, evolved = _resolve(table_path, v)
+    s = _state(table_path, head if version is None else version)
+    predicates = _phys_predicates(predicates, s.mapping)
     kept = [
         (rel, stats, dv)
-        for rel, stats, dv in files
+        for rel, stats, dv in s.files
         if _file_survives(stats, predicates)
     ]
-    if not kept:
-        df = spark.createDataFrame([], schema)
-    else:
-        df = _read_entries(
-            spark,
-            table_path,
-            kept,
-            evolved,
-            read_schema=(
-                _wide_read_schema(table_path, v, widened)
-                if widened
-                else None
-            ),
-            snapshot_schema=schema,
-        )
-    df = _apply_schema_ops_physical(df, added, dropped, widened)
-    for col, op, val in predicates:
-        c = F.col(col)
-        df = df.filter(
-            {
-                "=": c == val,
-                "<": c < val,
-                "<=": c <= val,
-                ">": c > val,
-                ">=": c >= val,
-            }[op]
-        )
-    return _to_logical_df(df, mapping)
+    return _to_logical_df(
+        _filter(_scan(spark, table_path, s, kept), predicates), s.mapping
+    )
 
 
 def tf_scan_any(
@@ -2452,37 +2441,18 @@ def tf_scan_any(
     head = latest_version(table_path)
     if head < 0:
         raise FileNotFoundError(f"no table at {table_path}")
-    v = head if version is None else version
-    mapping = tf_column_mapping(table_path, version=v)
-    added, dropped = _schema_ops(table_path, v)
-    widened = _widened(table_path, v)
-    pcol = _phys_predicates([(col, "=", None)], mapping)[0][0]
-    files, schema, evolved = _resolve(table_path, v)
+    s = _state(table_path, head if version is None else version)
+    pcol = s.mapping.get(col, col)
     kept = [
         (rel, stats, dv)
-        for rel, stats, dv in files
+        for rel, stats, dv in s.files
         if any(
             _file_survives(stats, [(pcol, "=", val)]) for val in values
         )
     ]
-    if not kept or not values:
-        df = spark.createDataFrame([], schema)
-    else:
-        df = _read_entries(
-            spark,
-            table_path,
-            kept,
-            evolved,
-            read_schema=(
-                _wide_read_schema(table_path, v, widened)
-                if widened
-                else None
-            ),
-            snapshot_schema=schema,
-        )
-    df = _apply_schema_ops_physical(df, added, dropped, widened)
+    df = _scan(spark, table_path, s, kept if values else [])
     df = df.filter(F.col(pcol).isin(list(values)))
-    return _to_logical_df(df, mapping)
+    return _to_logical_df(df, s.mapping)
 
 
 @register(
@@ -2632,14 +2602,6 @@ def io_table_format_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# committed_batch_ids cache: table path -> (next unscanned version,
-# batch ids seen so far). Commits are immutable once published, so a
-# scanned prefix never changes — each call reads only NEW versions,
-# keeping the per-epoch cost O(new commits) instead of re-opening every
-# commit file every micro-batch (O(versions²) over a stream's life).
-_BATCH_ID_CACHE: dict[tuple[str, str], tuple[int, set[int]]] = {}
-
-
 # ---------------------------------------------------------------------------
 # MERGE INTO through the log — the Delta MERGE physical shape, made
 # scale-correct by the per-file stats: a change batch only REWRITES
@@ -2685,19 +2647,17 @@ def tf_merge(
     read_version = latest_version(table_path)
     if read_version < 0:
         raise FileNotFoundError(f"no table at {table_path}")
-    if batch_id is not None and batch_id in committed_merge_txn_ids(
-        table_path
-    ):
+    s = _state(table_path, read_version, gate=False)
+    if batch_id is not None and batch_id in s.merge_txn_ids:
         return read_version, 0, 0  # replayed merge txn: no-op
+    _gate(s, table_path)
     # the merge plan runs in PHYSICAL column space (files, stats);
     # the change batch and key arrive logical
-    mapping = tf_column_mapping(table_path, version=read_version)
-    added, dropped = _schema_ops(table_path, read_version)
-    widened = _widened(table_path, read_version)
-    changes = _to_physical_df(changes, mapping, dropped, widened)
+    mapping = s.mapping
+    changes = _to_physical_df(changes, mapping, s.dropped, s.widened)
     key_col = mapping.get(key_col, key_col)
     delete_col = mapping.get(delete_col, delete_col)
-    files, schema, evolved = _resolve(table_path, read_version)
+    files = s.files
     lo_hi = changes.agg(
         F.min(key_col).alias("lo"), F.max(key_col).alias("hi")
     ).collect()[0]
@@ -2727,25 +2687,7 @@ def tf_merge(
         # rows a prior DV delete removed; the ADD/DROP projection runs
         # here too so a rewrite materializes the evolved schema instead
         # of resurrecting tombstoned bytes
-        base = _apply_schema_ops_physical(
-            _read_entries(
-                spark,
-                table_path,
-                touched_entries,
-                evolved,
-                read_schema=(
-                    _wide_read_schema(
-                        table_path, read_version, widened
-                    )
-                    if widened
-                    else None
-                ),
-                snapshot_schema=schema,
-            ),
-            added,
-            dropped,
-            widened,
-        )
+        base = _scan(spark, table_path, s, touched_entries)
         survivors = base.join(
             F.broadcast(upserts.select(key_col)), key_col, "left_anti"
         ).join(F.broadcast(deletes), key_col, "left_anti")
@@ -2756,11 +2698,9 @@ def tf_merge(
     else:
         merged = upserts
     _validate_constraints(
-        _to_logical_df(merged, mapping), table_path, "merge"
+        _to_logical_df(merged, mapping), table_path, "merge", s
     )
-    add, out_schema = _stage(
-        merged, table_path, _live_bloom_columns(table_path, read_version)
-    )
+    add, out_schema = _stage(merged, table_path, s.bloom_columns)
     return (
         _commit_with_rebase(
             table_path,
@@ -3746,10 +3686,10 @@ def io_table_format_protocol(
     # pre-feature snapshots remain readable by pre-feature readers
     if required_reader_version(tpath, v_pre) != _FEATURE_BASE:
         raise RuntimeError("old snapshot's requirement escalated")
-    _check_protocol(tpath, v_pre, supported=_FEATURE_BASE)  # no raise
+    _gate(_state(tpath, v_pre, gate=False), tpath, _FEATURE_BASE)  # no raise
     # a downgraded reader must refuse the evolved head loudly
     try:
-        _check_protocol(tpath, supported=_FEATURE_DV)
+        _gate(_state(tpath, gate=False), tpath, _FEATURE_DV)
     except ProtocolUnsupported:
         pass
     else:
@@ -3924,54 +3864,22 @@ def io_table_format_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _committed_txn_ids(
-    table_path: str, id_key: str, action: str | None = None
-) -> set[int]:
-    """Incrementally-maintained set of txn ids recorded under *id_key*
-    in the log (optionally only on commits whose ``action`` matches).
-    Append epochs (``batch_id``) and merge txns (``merge_txn_id``) live
-    in SEPARATE namespaces: a table fed by both foreachBatch appends
-    (epoch ids 0,1,2,...) and CDF merges keyed by bronze versions must
-    never no-op a legitimate merge whose id happens to collide with a
-    prior append epoch (ADVICE r14 #2)."""
-    key = (os.path.abspath(table_path), id_key, action)
-    start, seen = _BATCH_ID_CACHE.get(key, (0, set()))
-    head = latest_version(table_path)
-    if start <= head:
-        # extend a PRIVATE copy and swap it in whole — the cached set
-        # is reachable from several driver threads under overlap()
-        # (the _PROTO_CACHE discipline); in-place adds could race a
-        # sibling's copy-out iteration
-        seen = set(seen)
-        for v in range(start, head + 1):
-            with open(_log_path(table_path, v)) as f:
-                commit = json.load(f)
-            if action is not None and commit.get("action") != action:
-                continue
-            b = commit.get(id_key)
-            if b is not None:
-                seen.add(int(b))
-        _BATCH_ID_CACHE[key] = (head + 1, seen)
-    return set(seen)
-
-
 def committed_batch_ids(table_path: str) -> set[int]:
     """Streaming-sink replay guard: the set of foreachBatch epoch ids
-    already committed to the log (incrementally maintained)."""
-    return _committed_txn_ids(table_path, "batch_id")
+    already committed to the log."""
+    return set(_state(table_path, gate=False).batch_ids)
 
 
 def committed_merge_txn_ids(table_path: str) -> set[int]:
     """Merge replay guard: txn ids of idempotent MERGEs already in the
-    log — a namespace disjoint from append epoch ids. Transition rule
-    (ADVICE r15 #5): merges committed BEFORE the namespace split
-    recorded their id under ``batch_id`` on the merge commit itself;
-    those ids stay replay-protected by unioning in batch_ids that ride
-    commits whose action is 'merge' (append epochs are untouched — the
-    action filter keeps the namespaces disjoint)."""
-    return _committed_txn_ids(table_path, "merge_txn_id") | (
-        _committed_txn_ids(table_path, "batch_id", action="merge")
-    )
+    log — a namespace disjoint from append epoch ids (ADVICE r14 #2: a
+    table fed by both foreachBatch appends and CDF merges keyed by
+    bronze versions must never no-op a merge whose id collides with an
+    append epoch). Transition rule (ADVICE r15 #5): merges committed
+    BEFORE the namespace split recorded their id under ``batch_id`` on
+    the merge commit itself; those ids stay replay-protected (append
+    epochs are untouched — only merge commits count)."""
+    return set(_state(table_path, gate=False).merge_txn_ids)
 
 
 def tf_append_batch(df: DataFrame, table_path: str, batch_id: int) -> int | None:
@@ -3981,28 +3889,20 @@ def tf_append_batch(df: DataFrame, table_path: str, batch_id: int) -> int | None
     replay is a no-op instead of a duplicate append; the same contract
     Delta's `txn` action gives idempotent writers). Returns the
     committed version, or None when the epoch was already in the log."""
-    if batch_id in committed_batch_ids(table_path):
-        return None
-    _check_protocol(table_path)  # the tf_append gate, same reason
-    _validate_constraints(df, table_path, "streaming append")
     # metadata pinned to a pre-stage read_version + the rebase commit
     # path: the tf_append TOCTOU fix (ADVICE r15 #2) applies here too,
     # and the rebase's interleave scan now refuses a schema/rename
     # commit landing between staging and publish instead of silently
     # committing physically-stale epoch files
     read_version = latest_version(table_path)
+    s = _state(table_path, read_version, gate=False)
+    if batch_id in s.batch_ids:
+        return None
+    _gate(s, table_path)  # the tf_append gate, same reason
+    _validate_constraints(df, table_path, "streaming append", s)
     logical_df = df
-    df = _to_physical_df(
-        df,
-        tf_column_mapping(table_path, version=read_version),
-        _schema_ops(table_path, read_version)[1],
-        _widened(table_path, read_version),
-    )
-    add, schema = _stage(
-        df,
-        table_path,
-        _live_bloom_columns(table_path, version=read_version),
-    )
+    df = _to_physical_df(df, s.mapping, s.dropped, s.widened)
+    add, schema = _stage(df, table_path, s.bloom_columns)
     return _commit_with_rebase(
         table_path,
         add,
@@ -4050,35 +3950,18 @@ def tf_compact(
     import pyspark.sql.functions as F
 
     head = latest_version(table_path)
-    entries, snap_schema, evolved = _resolve(table_path, head)
+    s = _state(table_path, head)
     # DVs applied: compaction materializes the LOGICAL snapshot, so the
     # rewritten files carry no deletion vectors (the rewrite is also
     # how a heavily-deleted file sheds its DV weight) and no tombstoned
     # columns (ADD/DROP projection applied — the rewrite is also how a
     # dropped column's bytes eventually leave the storage)
-    _widen_map = _widened(table_path, head)
-    snap = _apply_schema_ops_physical(
-        _read_entries(
-            spark,
-            table_path,
-            entries,
-            evolved,
-            read_schema=(
-                _wide_read_schema(table_path, head, _widen_map)
-                if _widen_map
-                else None
-            ),
-            snapshot_schema=snap_schema,
-        ),
-        *_schema_ops(table_path, head),
-        _widen_map,
-    )
-    remove = [rel for rel, _, _ in entries]
+    snap = _scan(spark, table_path, s, s.files)
+    remove = list(s.live)
     if zorder_by is not None and cluster_by is not None:
         raise ValueError("zorder_by and cluster_by are exclusive")
     if cluster_by is not None:
-        _m = tf_column_mapping(table_path, version=head)
-        phys = [_m.get(c, c) for c in cluster_by]
+        phys = [s.mapping.get(c, c) for c in cluster_by]
         rewritten = snap.repartitionByRange(
             max(1, n_files), *phys
         ).sortWithinPartitions(*phys)
@@ -4088,8 +3971,7 @@ def tf_compact(
             _zvalue,
         )
 
-        _m = tf_column_mapping(table_path, version=head)
-        ca, cb = (_m.get(c, c) for c in zorder_by)  # logical → physical
+        ca, cb = (s.mapping.get(c, c) for c in zorder_by)  # → physical
         bounds = snap.agg(
             F.min(ca).alias("_alo"),
             F.max(ca).alias("_ahi"),
@@ -4114,9 +3996,7 @@ def tf_compact(
         rewritten = snap.coalesce(max(1, n_files))
     # compaction is pure layout: every row was validated by the write
     # that introduced it, so no constraint pass here
-    add, schema = _stage(
-        rewritten, table_path, _live_bloom_columns(table_path, head)
-    )
+    add, schema = _stage(rewritten, table_path, s.bloom_columns)
     version = head + 1
     _publish(table_path, version, add, remove, schema, "compact")
     try:
@@ -4304,92 +4184,43 @@ def tf_changes(
         raise ValueError(
             f"change range [{from_version}, {to}] outside [0, {head}]"
         )
-    widened_to = _widened(table_path, to)
-    fschemas = _file_schemas(table_path, to) if widened_to else {}
+    plan: list[tuple[str, list, str, int]] = []  # (read, what, type, v)
+    fschemas: dict[str, str] = {}  # writer schema of each file read
 
-    def _rs(rels) -> str | None:
-        """Explicit promoted read schema over *rels* — only widened
-        tables need one (mergeSchema handles same-width evolution)."""
-        if not widened_to:
-            return None
-        return _union_schema_of(
-            (fschemas[r] for r in rels if r in fschemas), widened_to
-        )
-
-    pieces: list[DataFrame] = []
-
-    def _tag(df: DataFrame, kind: str, v: int) -> None:
-        pieces.append(
-            df.withColumn("_change_type", F.lit(kind)).withColumn(
-                "_commit_version", F.lit(v).cast("long")
-            )
-        )
-
-    for v in range(from_version, to + 1):
-        with open(_log_path(table_path, v)) as f:
-            commit = json.load(f)
+    def visit(v: int, commit: dict, s) -> None:
         action = commit.get("action", "append")
         if action in ("compact", "constraint", "rename", "schema"):
-            continue  # pure layout / pure metadata: no logical change
-        adds = [_add_path(e) for e in commit.get("add", [])]
+            return  # pure layout / pure metadata: no logical change
+        added = _adds(commit, s.schema)
+        adds = [rel for rel, _, _ in added]
+        fschemas.update((rel, sch) for rel, sch, _ in added)
+        for rel in commit.get("remove", []) + [
+            e["path"] for e in commit.get("dv", [])
+        ]:
+            if rel in s.live:
+                fschemas.setdefault(rel, s.live[rel][0])
         if action in ("delete", "update"):
             # delete: the newly-hidden rows. update: the same rows as
             # PREIMAGES, with the commit's added files carrying the
             # POSTIMAGES (they hold only updated rows by construction)
-            pairs = []
-            for e in commit.get("dv", []):
-                new = set(
-                    int(i) for i in _dv_indexes(table_path, e["dv"])
-                )
-                if e.get("prev_dv"):
-                    new -= set(
-                        int(i)
-                        for i in _dv_indexes(table_path, e["prev_dv"])
-                    )
-                if new:
-                    pairs.append((e["path"], sorted(new)))
-            if pairs:
-                _tag(
-                    _rows_at_positions(
-                        spark,
-                        table_path,
-                        pairs,
-                        read_schema=_rs([r for r, _ in pairs]),
-                    ),
-                    "delete" if action == "delete" else "update_preimage",
-                    v,
-                )
+            hidden, _ = _dv_diffs(table_path, commit)
+            if hidden:
+                kind = "delete" if action == "delete" else "update_preimage"
+                plan.append(("positions", hidden, kind, v))
             if action == "update" and adds:
-                _tag(
-                    spark.read.option("mergeSchema", "true").parquet(
-                        *(os.path.join(table_path, rel) for rel in adds)
-                    ),
-                    "update_postimage",
-                    v,
-                )
-            continue
+                plan.append(("files", adds, "update_postimage", v))
+            return
         if action in ("overwrite", "merge", "restore") and commit.get(
             "remove"
         ):
             # the removed files' THEN-LIVE rows (their v-1 DVs applied)
-            _, prev_live = _resolve_live(table_path, v - 1)
             removed = [
-                (rel, prev_live[rel][1], prev_live[rel][2])
+                (rel, s.live[rel][1], s.live[rel][2])
                 for rel in commit["remove"]
-                if rel in prev_live
+                if rel in s.live
             ]
             if removed:
-                _tag(
-                    _read_entries(
-                        spark,
-                        table_path,
-                        removed,
-                        True,
-                        read_schema=_rs([r for r, _, _ in removed]),
-                    ),
-                    "delete",
-                    v,
-                )
+                plan.append(("entries", removed, "delete", v))
         if action == "restore":
             # re-added files insert their POST-DV rows (the commit can
             # attach the target's sidecar to a file it re-adds); DV
@@ -4401,83 +4232,64 @@ def tf_changes(
                 e["path"]: e["dv"] for e in commit.get("dv", [])
             }
             if adds:
-                entries = [
-                    (rel, {}, dv_by_path.get(rel)) for rel in adds
-                ]
-                _tag(
-                    _read_entries(
-                        spark,
-                        table_path,
-                        entries,
-                        True,
-                        read_schema=_rs(adds),
-                    ),
-                    "insert",
-                    v,
-                )
-            dead_pairs, revived_pairs = [], []
-            for e in commit.get("dv", []):
-                if e["path"] in set(adds):
-                    continue
-                new = (
-                    set(int(i) for i in _dv_indexes(table_path, e["dv"]))
-                    if e["dv"]
-                    else set()
-                )
-                prev = (
-                    set(
-                        int(i)
-                        for i in _dv_indexes(table_path, e["prev_dv"])
-                    )
-                    if e.get("prev_dv")
-                    else set()
-                )
-                if new - prev:
-                    dead_pairs.append((e["path"], sorted(new - prev)))
-                if prev - new:
-                    revived_pairs.append((e["path"], sorted(prev - new)))
-            if dead_pairs:
-                _tag(
-                    _rows_at_positions(
-                        spark,
-                        table_path,
-                        dead_pairs,
-                        read_schema=_rs([r for r, _ in dead_pairs]),
-                    ),
-                    "delete",
-                    v,
-                )
-            if revived_pairs:
-                _tag(
-                    _rows_at_positions(
-                        spark,
-                        table_path,
-                        revived_pairs,
-                        read_schema=_rs([r for r, _ in revived_pairs]),
-                    ),
-                    "insert",
-                    v,
-                )
-            continue
+                entries = [(rel, {}, dv_by_path.get(rel)) for rel in adds]
+                plan.append(("entries", entries, "insert", v))
+            hidden, revealed = _dv_diffs(table_path, commit, set(adds))
+            if hidden:
+                plan.append(("positions", hidden, "delete", v))
+            if revealed:
+                plan.append(("positions", revealed, "insert", v))
+            return
         if adds:
-            _tag(
-                spark.read.option("mergeSchema", "true").parquet(
-                    *(os.path.join(table_path, rel) for rel in adds)
-                ),
-                "insert",
-                v,
+            plan.append(("files", adds, "insert", v))
+
+    # one forward fold: the state at from_version - 1, then each
+    # commit of the range against the state just before it
+    end = _state(table_path, to, since=from_version - 1, visit=visit)
+
+    def _rs(rels) -> str | None:
+        """Explicit promoted read schema over *rels* — only widened
+        tables need one (mergeSchema handles same-width evolution)."""
+        if not end.widened:
+            return None
+        return _union_schema_of(
+            (fschemas[r] for r in rels if r in fschemas), end.widened
+        )
+
+    def _read(how: str, what: list) -> DataFrame:
+        if how == "files":
+            return spark.read.option("mergeSchema", "true").parquet(
+                *(os.path.join(table_path, rel) for rel in what)
             )
-    mapping = tf_column_mapping(table_path, version=to)
+        if how == "positions":
+            return _rows_at_positions(
+                spark, table_path, what, read_schema=_rs(r for r, _ in what)
+            )
+        return _read_entries(
+            spark,
+            table_path,
+            what,
+            True,
+            read_schema=_rs(r for r, _, _ in what),
+        )
+
+    pieces = [
+        _read(how, what)
+        .withColumn("_change_type", F.lit(kind))
+        .withColumn("_commit_version", F.lit(v).cast("long"))
+        for how, what, kind, v in plan
+    ]
     if not pieces:
         from pyspark.sql.types import LongType, StringType
 
-        _, ddl, _ = _replay(table_path, to)
         schema = (
-            spark.createDataFrame([], ddl)
+            spark.createDataFrame([], end.schema)
             .schema.add("_change_type", StringType())
             .add("_commit_version", LongType())
         )
-        return _to_logical_df(spark.createDataFrame([], schema), mapping)
+        return _to_logical_df(
+            spark.createDataFrame([], schema), end.mapping
+        )
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p, allowMissingColumns=True)
@@ -4487,9 +4299,9 @@ def tf_changes(
     # the snapshot a consumer maintains from it
     return _to_logical_df(
         _apply_schema_ops_physical(
-            out, *_schema_ops(table_path, to), widened_to
+            out, end.added, end.dropped, end.widened
         ),
-        mapping,
+        end.mapping,
     )
 
 
@@ -4503,8 +4315,7 @@ def tf_history(table_path: str) -> list[dict]:
         raise FileNotFoundError(f"no table at {table_path}")
     out = []
     for v in range(head, -1, -1):
-        with open(_log_path(table_path, v)) as f:
-            commit = json.load(f)
+        commit = _commit(table_path, v)
         row = {
             "version": v,
             "action": commit.get("action", "append"),
@@ -4604,7 +4415,10 @@ def tf_vacuum(table_path: str, keep_from_version: int) -> list[str]:
       silently reads wrong data;
     * ``keep_from_version`` beyond the head is refused — the old
       behavior's empty keep-range would have deleted every live file
-      (Delta's retentionDurationCheck, version-addressed)."""
+      (Delta's retentionDurationCheck, version-addressed).
+
+    Also sweeps orphan publish temp files (:func:`_sweep_inprogress`);
+    those are not in the returned list."""
     head = latest_version(table_path)
     if keep_from_version > head:
         raise ValueError(
@@ -4616,25 +4430,55 @@ def tf_vacuum(table_path: str, keep_from_version: int) -> list[str]:
     if pins:
         keep_from_version = min(keep_from_version, pins[0])
     keep: set[str] = set()
-    for v in range(max(0, keep_from_version), head + 1):
-        _, live = _resolve_live(table_path, v)
-        for rel, (_, _, dv) in live.items():
+    ever: set[str] = set()
+
+    def keep_live(s) -> None:
+        for rel, (_, _, dv) in s.live.items():
             keep.add(rel)
             if dv:  # a live snapshot's DV sidecar must survive too
                 keep.add(dv)
-    ever: set[str] = set()
-    for v in range(head + 1):
-        with open(_log_path(table_path, v)) as f:
-            commit = json.load(f)
+
+    def visit(v: int, commit: dict, s) -> None:
+        if v - 1 >= keep_from_version:  # s is the snapshot at v - 1
+            keep_live(s)
         ever.update(_add_path(e) for e in commit.get("add", []))
         # a restore's DV-clearing action carries dv=None — not a file
         ever.update(e["dv"] for e in commit.get("dv", []) if e.get("dv"))
+
+    # one forward fold from version 0: every snapshot >= the cutoff
+    # keeps its live files, and every file ever added is a candidate
+    keep_live(_state(table_path, head, since=-1, visit=visit))
     doomed = sorted(ever - keep)
     for rel in doomed:
         p = os.path.join(table_path, rel)
         if os.path.exists(p):
             os.remove(p)
+    _sweep_inprogress(table_path)
     return doomed
+
+
+# a publish temp file lives for one write+fsync+link; one this old was
+# left by a writer that died in between
+_INPROGRESS_GRACE_S = 3600.0
+
+
+def _sweep_inprogress(table_path: str) -> None:
+    """Remove orphan ``*.inprogress`` publish temp files (commits,
+    checkpoints, pins) older than :data:`_INPROGRESS_GRACE_S`."""
+    cutoff = time.time() - _INPROGRESS_GRACE_S
+    for sub in (_LOG_DIR, _PIN_DIR):
+        d = os.path.join(table_path, sub)
+        if not os.path.isdir(d):
+            continue
+        for f in os.listdir(d):
+            p = os.path.join(d, f)
+            try:
+                if f.endswith(".inprogress") and (
+                    os.stat(p).st_mtime < cutoff
+                ):
+                    os.remove(p)
+            except FileNotFoundError:
+                pass  # its writer linked or removed it meanwhile
 
 
 @register(
@@ -4813,8 +4657,7 @@ class TableFormatStreamReader(DataSourceStreamReader):
         self._observe_end(hi)
         parts: list[_TfFilePartition] = []
         for v in range(lo + 1, hi + 1):
-            with open(_log_path(self.table_path, v)) as f:
-                commit = json.load(f)
+            commit = _commit(self.table_path, v)
             if commit.get("action") in ("constraint", "rename"):
                 continue  # metadata-only: adds no rows, breaks nothing
             if commit.get("action") not in ("append",):
@@ -4866,12 +4709,12 @@ class TableFormatCdfStreamReader(TableFormatStreamReader):
         lo, hi = int(start["version"]), int(end["version"])
         self._observe_end(hi)
         parts: list[_TfChangePartition] = []
-        for v in range(lo + 1, hi + 1):
-            with open(_log_path(self.table_path, v)) as f:
-                commit = json.load(f)
+        t = self.table_path
+
+        def visit(v: int, commit: dict, s) -> None:
             action = commit.get("action", "append")
             if action in ("compact", "constraint", "rename"):
-                continue
+                return
             if action == "schema":
                 raise ValueError(
                     f"version {v} is a schema commit (ADD/DROP "
@@ -4879,134 +4722,60 @@ class TableFormatCdfStreamReader(TableFormatStreamReader):
                     "fixed at stream start — restart the stream from "
                     "here (batch tf_changes handles evolution)"
                 )
+            adds = [_add_path(e) for e in commit.get("add", [])]
             if action in ("delete", "update"):
-                kind = (
-                    "delete" if action == "delete" else "update_preimage"
+                kind = "delete" if action == "delete" else "update_preimage"
+                parts.extend(
+                    _TfChangePartition(os.path.join(t, rel), kind, v, pos)
+                    for rel, pos in _dv_diffs(t, commit)[0]
                 )
-                for e in commit.get("dv", []):
-                    new = set(
-                        int(i)
-                        for i in _dv_indexes(self.table_path, e["dv"])
-                    )
-                    if e.get("prev_dv"):
-                        new -= set(
-                            int(i)
-                            for i in _dv_indexes(
-                                self.table_path, e["prev_dv"]
-                            )
-                        )
-                    if new:
-                        parts.append(
-                            _TfChangePartition(
-                                os.path.join(self.table_path, e["path"]),
-                                kind,
-                                v,
-                                sorted(new),
-                            )
-                        )
                 if action == "update":
-                    for e in commit.get("add", []):
-                        parts.append(
-                            _TfChangePartition(
-                                os.path.join(
-                                    self.table_path, _add_path(e)
-                                ),
-                                "update_postimage",
-                                v,
-                            )
-                        )
-                continue
-            if action in (
-                "overwrite",
-                "merge",
-                "restore",
-            ) and commit.get("remove"):
-                _, prev_live = _resolve_live(self.table_path, v - 1)
-                for rel in commit["remove"]:
-                    if rel not in prev_live:
-                        continue
-                    dv = prev_live[rel][2]
-                    excl = (
-                        [int(i) for i in _dv_indexes(self.table_path, dv)]
-                        if dv
-                        else None
-                    )
-                    parts.append(
+                    parts.extend(
                         _TfChangePartition(
-                            os.path.join(self.table_path, rel),
-                            "delete",
-                            v,
-                            excl,
-                            exclude=excl is not None,
+                            os.path.join(t, rel), "update_postimage", v
                         )
+                        for rel in adds
                     )
+                return
+
+            def unhidden(rel: str, dv: str | None, kind: str):
+                """Every row of *rel* that its sidecar *dv* leaves live."""
+                excl = sorted(_dv_set(t, dv)) if dv else None
+                return _TfChangePartition(
+                    os.path.join(t, rel), kind, v, excl,
+                    exclude=excl is not None,
+                )
+
+            if action in ("overwrite", "merge", "restore"):
+                parts.extend(
+                    unhidden(rel, s.live[rel][2], "delete")
+                    for rel in commit.get("remove", [])
+                    if rel in s.live
+                )
             if action == "restore":
                 # mirrors tf_changes: re-adds insert post-DV rows; DV
                 # diffs on still-live files emit newly-hidden deletes
                 # and un-deleted (revived) inserts
-                added = {_add_path(e) for e in commit.get("add", [])}
                 dv_by_path = {
                     e["path"]: e["dv"] for e in commit.get("dv", [])
                 }
-                for rel in sorted(added):
-                    dv = dv_by_path.get(rel)
-                    excl = (
-                        [int(i) for i in _dv_indexes(self.table_path, dv)]
-                        if dv
-                        else None
-                    )
-                    parts.append(
-                        _TfChangePartition(
-                            os.path.join(self.table_path, rel),
-                            "insert",
-                            v,
-                            excl,
-                            exclude=excl is not None,
-                        )
-                    )
-                for e in commit.get("dv", []):
-                    if e["path"] in added:
-                        continue
-                    new = (
-                        set(
-                            int(i)
-                            for i in _dv_indexes(self.table_path, e["dv"])
-                        )
-                        if e["dv"]
-                        else set()
-                    )
-                    prev = (
-                        set(
-                            int(i)
-                            for i in _dv_indexes(
-                                self.table_path, e["prev_dv"]
-                            )
-                        )
-                        if e.get("prev_dv")
-                        else set()
-                    )
-                    p = os.path.join(self.table_path, e["path"])
-                    if new - prev:
-                        parts.append(
-                            _TfChangePartition(
-                                p, "delete", v, sorted(new - prev)
-                            )
-                        )
-                    if prev - new:
-                        parts.append(
-                            _TfChangePartition(
-                                p, "insert", v, sorted(prev - new)
-                            )
-                        )
-                continue
-            for e in commit.get("add", []):
-                parts.append(
-                    _TfChangePartition(
-                        os.path.join(self.table_path, _add_path(e)),
-                        "insert",
-                        v,
-                    )
+                parts.extend(
+                    unhidden(rel, dv_by_path.get(rel), "insert")
+                    for rel in sorted(set(adds))
                 )
+                hidden, revealed = _dv_diffs(t, commit, set(adds))
+                for kind, pairs in (("delete", hidden), ("insert", revealed)):
+                    parts.extend(
+                        _TfChangePartition(os.path.join(t, rel), kind, v, pos)
+                        for rel, pos in pairs
+                    )
+                return
+            parts.extend(
+                _TfChangePartition(os.path.join(t, rel), "insert", v)
+                for rel in adds
+            )
+
+        _state(t, hi, since=lo, visit=visit)
         return parts
 
     def read(self, partition: _TfChangePartition):
@@ -5056,14 +4825,14 @@ class TableFormatDataSource(DataSource):
         )
 
     def schema(self):
-        path = self.options["path"]
-        _, ddl, _ = _replay(path, latest_version(path))
+        s = _state(self.options["path"])
+        ddl = s.schema
         if not (ddl.startswith("struct<") and ddl.endswith(">")):
             raise ValueError(f"unexpected table schema DDL {ddl!r}")
         # surface the LOGICAL column names: the stored DDL is physical
         # (what the parquet files carry); renames only relabel here —
         # the readers' tuples keep the same physical field order
-        inv = {p: l for l, p in tf_column_mapping(path).items()}
+        inv = {p: l for l, p in s.mapping.items()}
         fields = [
             (lambda n, t: f"{inv.get(n, n)}:{t}")(*f.split(" ", 1))
             for f in _split_ddl_fields(ddl)

@@ -195,7 +195,7 @@ class TestTableFormatMaintenance:
 
     def test_compact_is_value_invisible_and_single_file(self, spark, tmp_path):
         from fluent_bit_filter_math_spark.sources.table_format import (
-            _replay,
+            _resolve,
             tf_append,
             tf_compact,
             tf_read,
@@ -208,7 +208,7 @@ class TestTableFormatMaintenance:
             )  # 16 small files
         before = sorted(r["id"] for r in tf_read(spark, t).collect())
         v = tf_compact(spark, t)
-        files, _, _ = _replay(t, v)
+        files, _, _ = _resolve(t, v)
         assert len(files) == 1  # coalesced
         after = sorted(r["id"] for r in tf_read(spark, t).collect())
         assert after == before == list(range(40))

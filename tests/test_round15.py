@@ -113,7 +113,7 @@ class TestMergeTxnNamespace:
         assert v2 == v and rw2 == 0
         assert 7 in tf.committed_merge_txn_ids(t)
         # the merge txn id never leaks into the append-epoch namespace
-        tf._BATCH_ID_CACHE.clear()
+        tf._STATE_CACHE.clear()
         assert tf.committed_batch_ids(t) == {7}
         assert tf.committed_merge_txn_ids(t) == {7}
 
@@ -417,7 +417,7 @@ class TestProtocolVersioning:
         assert commit.pop("min_reader_version") == tf._FEATURE_DV
         with open(p, "w") as f:
             f.write(_json.dumps(commit, sort_keys=True))
-        tf._PROTO_CACHE.clear()
+        tf._STATE_CACHE.clear()
         assert tf.required_reader_version(t) == tf._FEATURE_DV
 
     def test_requirement_monotone_over_features(self, tmp_path, spark):
@@ -709,7 +709,7 @@ class TestBloomTableLevelProperty:
         ).coalesce(1)
         tf.tf_append(mk(0, 40), t, bloom_columns=("s",))
         tf.tf_append(mk(40, 80), t)  # no explicit param: inferred
-        assert tf._live_bloom_columns(t) == ("s",)
+        assert tf._state(t).bloom_columns == ("s",)
         # a probe for an absent value prunes BOTH files via blooms
         kept, total = tf.tf_pruned_files(t, [("s", "=", "absent")])
         assert total == 2 and len(kept) == 0
@@ -724,12 +724,12 @@ class TestBloomTableLevelProperty:
             [(63, "v63x", False)], "k long, s string, _delete boolean"
         )
         tf.tf_merge(spark, t, ch, "k")
-        assert tf._live_bloom_columns(t) == ("s",)
+        assert tf._state(t).bloom_columns == ("s",)
         kept, total = tf.tf_pruned_files(t, [("s", "=", "absent")])
         assert len(kept) == 0 and total >= 1
         # streaming append inherits it as well
         tf.tf_append_batch(mk(80, 90), t, batch_id=0)
-        assert tf._live_bloom_columns(t) == ("s",)
+        assert tf._state(t).bloom_columns == ("s",)
         # overwrite replaces content but keeps the table-level property
         tf.tf_overwrite(mk(0, 10), t)
         kept, total = tf.tf_pruned_files(t, [("s", "=", "absent")])

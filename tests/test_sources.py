@@ -218,7 +218,7 @@ def test_scratch_dir_private_generational():
     assert os.path.dirname(scratch_dir("unittest-scratch-2")) != base
 
 
-def test_json_sink_exactly_once_under_real_task_retry():
+def test_json_sink_exactly_once_under_real_task_retry(tmp_path):
     """Inject a genuine first-attempt task failure into a jsonsink
     write and verify the manifest commit protocol delivers
     exactly-once: the failed attempt's partial shard stays on disk
@@ -230,12 +230,11 @@ def test_json_sink_exactly_once_under_real_task_retry():
     import os
     import subprocess
     import sys
-    import tempfile
     import textwrap
 
     script = textwrap.dedent(
         """
-        import json, os, sys, tempfile
+        import json, os, sys
         sys.path.insert(0, sys.argv[1])
         from pyspark.sql import SparkSession
         from pyspark.sql import functions as F
@@ -263,7 +262,7 @@ def test_json_sink_exactly_once_under_real_task_retry():
                 raise RuntimeError("injected first-attempt failure")
             return v
 
-        out_dir = tempfile.mkdtemp(prefix="jsonsink-retry-")
+        out_dir = sys.argv[2]
         df = (
             spark.range(0, 1000).repartition(4)
             .select(F.col("id").alias("event_id"),
@@ -291,17 +290,15 @@ def test_json_sink_exactly_once_under_real_task_retry():
         """
     )
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with tempfile.NamedTemporaryFile("w", suffix=".py", delete=False) as f:
-        f.write(script)
-        path = f.name
-    try:
-        out = subprocess.run(
-            [sys.executable, path, repo],
-            capture_output=True, text=True, timeout=240, check=True,
-        )
-        stats = json.loads(out.stdout.strip().splitlines()[-1])
-    finally:
-        os.unlink(path)
+    path = tmp_path / "retry_job.py"
+    path.write_text(script)
+    out_dir = tmp_path / "out"
+    out_dir.mkdir()
+    out = subprocess.run(
+        [sys.executable, str(path), repo, str(out_dir)],
+        capture_output=True, text=True, timeout=240, check=True,
+    )
+    stats = json.loads(out.stdout.strip().splitlines()[-1])
     # the retry really happened: one orphan shard beyond the manifest
     assert stats["disk_shards"] == stats["manifest_shards"] + 1, stats
     # and the manifest read is exactly-once despite it

@@ -1134,14 +1134,13 @@ def test_stateful_checkpoint_recovery_mid_replay(spark, tmp_path):
         )
 
 
-def test_tws_rocksdb_checkpoint_recovery_mid_replay(spark):
+def test_tws_rocksdb_checkpoint_recovery_mid_replay(spark, tmp_path):
     """The same stop/restart proof for transformWithStateInPandas:
     typed ValueState in the RocksDB provider must survive a mid-replay
     restart through the checkpoint — post-restart emissions carry
     full-history totals."""
     import glob
     import os
-    import tempfile
     import time
 
     from pyspark.sql import functions as F
@@ -1156,7 +1155,7 @@ def test_tws_rocksdb_checkpoint_recovery_mid_replay(spark):
 
     state_proto_shim.install()
     sf_dir = "/root/testdata/sf0.001"
-    base = tempfile.mkdtemp(prefix="tws-ckpt-recovery-")
+    base = str(tmp_path)
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     sink_dir = os.path.join(base, "emissions")
@@ -1251,7 +1250,7 @@ def test_tws_rocksdb_checkpoint_recovery_mid_replay(spark):
         )
 
 
-def test_tws_timer_survives_restart_and_fires_once(spark):
+def test_tws_timer_survives_restart_and_fires_once(spark, tmp_path):
     """r8 VERDICT #7 — the remaining TWS recovery path: an event-time
     timer ARMED before a stop must survive the restart through the
     RocksDB checkpoint and fire afterward EXACTLY ONCE, when the
@@ -1272,7 +1271,6 @@ def test_tws_timer_survives_restart_and_fires_once(spark):
     untouched."""
     import glob
     import os
-    import tempfile
     import time
 
     from pyspark.sql import functions as F
@@ -1289,7 +1287,7 @@ def test_tws_timer_survives_restart_and_fires_once(spark):
 
     state_proto_shim.install()
     sf_dir = "/root/testdata/sf0.001"
-    base = tempfile.mkdtemp(prefix="tws-timer-restart-")
+    base = str(tmp_path)
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     sink_dir = os.path.join(base, "emissions")
@@ -1416,7 +1414,7 @@ def test_tws_timer_survives_restart_and_fires_once(spark):
     )
 
 
-def test_tws_liststate_recovery_and_statestore_read(spark):
+def test_tws_liststate_recovery_and_statestore_read(spark, tmp_path):
     """Completes the typed-state recovery matrix: a ListState sketch
     (KMV k-min list) must survive a mid-replay stop/restart through
     the RocksDB checkpoint, and the proof reads the PERSISTED state
@@ -1425,7 +1423,6 @@ def test_tws_liststate_recovery_and_statestore_read(spark):
     over the full history, which is only possible if batch-1 state
     was recovered (file 2 alone lacks half the minima)."""
     import os
-    import tempfile
     import time
 
     from pyspark.sql import functions as F
@@ -1442,7 +1439,7 @@ def test_tws_liststate_recovery_and_statestore_read(spark):
     sf_dir = "/root/testdata/sf0.001"
     src = _kmv_split_src(spark, sf_dir)
     schema = spark.read.parquet(src).schema
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="tws-list-rec-"), "ckpt")
+    ckpt = str(tmp_path / "ckpt")
 
     confs = {
         "spark.sql.streaming.stateStore.providerClass":

@@ -118,16 +118,16 @@ def main() -> int:
         )
     print()
 
-    # 3. Protocol check: incremental prefix-max cache means O(new
-    # commits) JSON reads, not O(commits) per resolve.
+    # 3. Protocol check: the cached log state means O(new commits)
+    # JSON reads, not O(commits) per resolve.
     print("**Protocol-gate cost** (300-commit table; times in ms —"
-          " first call scans the log once, later calls hit the"
-          " prefix-max cache):\n")
+          " first call folds the log once, later calls hit the"
+          " log-state cache):\n")
     t = os.path.join(tempfile.mkdtemp(), "proto")
     df = spark.createDataFrame([(1, 2)], "k long, v long")
     for _ in range(300):
         tf.tf_append_batch(df, t, batch_id=tf.latest_version(t) + 1)
-    tf._PROTO_CACHE.clear()
+    tf._STATE_CACHE.clear()
     t0 = time.time()
     tf.required_reader_version(t)
     cold = (time.time() - t0) * 1e3
