@@ -43,6 +43,12 @@ state at or below the wanted version — the process's cached state of
 that table, the newest checkpoint, or the empty table — and applies
 only the commits after it. Every operation resolves one state and
 reads what it needs from it.
+
+The change feed is a plan, then one scan: a forward fold over the range
+lists its units (one data file's changed rows, tagged with a change type
+and version), and one parquet scan under the writer schemas the log
+records reads each unit's file once — no read infers a schema. The
+change-feed stream reads the same plan, one unit per partition.
 """
 
 from __future__ import annotations
@@ -55,7 +61,7 @@ import os
 import threading
 import time
 import uuid
-from collections.abc import Mapping
+from collections.abc import Mapping, Sequence
 from types import MappingProxyType, SimpleNamespace
 from typing import NamedTuple
 
@@ -1133,67 +1139,6 @@ def tf_restore(table_path: str, version: int) -> int:
             )
     if not adds and not remove and not dv_actions:
         return head  # the head already IS the target state
-    # CHECK constraints guard every path that makes rows LIVE, and a
-    # restore can resurrect rows deleted before a constraint was added
-    # (ADVICE r13 #2b). Validate exactly the becoming-live delta —
-    # re-added files (their target DV applied) plus positions a DV
-    # detach un-hides — never the whole snapshot (cost stays O(diff)).
-    if cur.constraints:
-        revived_pairs = []
-        for act in dv_actions:
-            rel = act["path"]
-            if rel in {a["path"] for a in adds}:
-                continue  # re-adds validate below with their DV applied
-            want = _dv_set(table_path, act["dv"])
-            have = _dv_set(table_path, act["prev_dv"])
-            if have - want:
-                revived_pairs.append((rel, sorted(have - want)))
-        if adds or revived_pairs:
-            spark = SparkSession.getActiveSession()
-            if spark is None:
-                raise RuntimeError(
-                    "tf_restore needs an active SparkSession to "
-                    "validate CHECK constraints over resurrected rows"
-                )
-            rs = (
-                _union_schema_of(
-                    (fsch for fsch, _, _ in target_live.values()),
-                    cur.widened,
-                )
-                if cur.widened
-                else None
-            )
-            frames = []
-            if adds:
-                frames.append(
-                    _read_entries(
-                        spark,
-                        table_path,
-                        [
-                            (a["path"], {}, target_live[a["path"]][2])
-                            for a in adds
-                        ],
-                        True,
-                        read_schema=rs,
-                    )
-                )
-            if revived_pairs:
-                frames.append(
-                    _rows_at_positions(
-                        spark, table_path, revived_pairs, read_schema=rs
-                    )
-                )
-            becoming_live = frames[0]
-            for fr in frames[1:]:
-                becoming_live = becoming_live.unionByName(
-                    fr, allowMissingColumns=True
-                )
-            _validate_constraints(
-                _to_logical_df(becoming_live, cur.mapping),
-                table_path,
-                "restore",
-                cur,
-            )
     body = {
         "action": "restore",
         "restored_version": version,
@@ -1202,6 +1147,33 @@ def tf_restore(table_path: str, version: int) -> int:
         "dv": dv_actions,
         "schema": target.schema,
     }
+    # CHECK constraints guard every path that makes rows LIVE, and a
+    # restore can resurrect rows deleted before a constraint was added
+    # (ADVICE r13 #2b). Validate exactly the becoming-live delta — the
+    # restore's own change-feed inserts: re-added files (their target
+    # DV applied) plus positions a DV detach un-hides — never the whole
+    # snapshot (cost stays O(diff)).
+    revived = [
+        u
+        for u in _commit_units(table_path, head + 1, body, cur)
+        if u.change_type == "insert"
+    ] if cur.constraints else []
+    if revived:
+        spark = SparkSession.getActiveSession()
+        if spark is None:
+            raise RuntimeError(
+                "tf_restore needs an active SparkSession to "
+                "validate CHECK constraints over resurrected rows"
+            )
+        _validate_constraints(
+            _to_logical_df(
+                _read_units(spark, table_path, revived, cur.widened),
+                cur.mapping,
+            ),
+            table_path,
+            "restore",
+            cur,
+        )
     if dv_actions:
         body["min_reader_version"] = _FEATURE_DV
     # the live set may have shrunk — same hook as overwrite
@@ -4105,62 +4077,218 @@ def io_table_format_zorder_compact(
 
 
 # ---------------------------------------------------------------------------
-# CHANGE DATA FEED — row-level inserts/deletes between two versions,
-# derived entirely from the log (Delta CDF's readChangeFeed, computed
-# rather than stored): an append's added rows are inserts; a DV
-# delete's NEWLY-deleted positions (new sidecar minus the previous
-# one) are deletes; an overwrite emits its removed files' then-live
-# rows as deletes plus its added rows as inserts; a compact emits
-# NOTHING (pure layout — its removes and adds hold identical logical
-# content). A merge emits the coarse (non-minimal) diff — every
+# CHANGE DATA FEED — row-level changes between two versions, derived
+# entirely from the log (Delta CDF's readChangeFeed, computed rather
+# than stored), as a PLAN and then ONE SCAN. The plan
+# (:func:`_change_units`, one forward fold) lists the range's units —
+# the rows of one data file (all of them, those its deletion vector
+# leaves live, or listed positions), tagged with a change type and a
+# commit version; :func:`_commit_units` states what each action
+# contributes. A merge emits the coarse (non-minimal) diff — every
 # rewritten file's rows appear as delete+insert pairs even when
-# unchanged — which is the honest computable answer without stored
-# change files; downstream consumers that need the minimal diff
-# anti-join the two sides on the key.
+# unchanged — the honest computable answer without stored change
+# files; consumers that need the minimal diff anti-join the two sides
+# on the key. The batch feed reads all units in one parquet scan under
+# the schemas the log records (:func:`_read_units`); the change-feed
+# stream turns each unit into one executor partition.
 # ---------------------------------------------------------------------------
 
 
-def _rows_at_positions(
+class _Unit(NamedTuple):
+    """One piece of a change plan: rows of ONE data file, tagged.
+    ``positions`` None takes every row; otherwise the sorted row
+    indexes to take, or with ``exclude`` the ones to leave out (the
+    file's deletion vector)."""
+
+    rel: str
+    schema: str  # the file's writer schema DDL
+    change_type: str
+    version: int
+    positions: Sequence[int] | None = None
+    exclude: bool = False
+
+
+def _live_unit(
+    table_path: str, rel: str, schema: str, kind: str, v: int, dv
+) -> _Unit:
+    """Every row of *rel* that its sidecar *dv* leaves live."""
+    if not dv:
+        return _Unit(rel, schema, kind, v)
+    return _Unit(rel, schema, kind, v, _dv_indexes(table_path, dv), True)
+
+
+def _commit_units(table_path: str, v: int, commit: dict, s) -> list[_Unit]:
+    """The units commit *v* changes, against state *s* just before it
+    (anything with ``live`` and ``schema``) — the one statement of what
+    each action does to the table's rows:
+
+    * append / overwrite / merge: every row of each added file, inserts;
+    * delete / update: each file's newly hidden DV positions, deletes
+      or update preimages; an update's added files hold exactly the
+      updated rows, its postimages;
+    * overwrite / merge / restore: each removed file's rows its
+      then-current DV left live, deletes;
+    * restore: each re-added file's rows the DV it attaches leaves
+      live, inserts; DV changes on files live before and after, newly
+      hidden positions as deletes and revealed ones as inserts (rows
+      reappearing is the point of a restore past a delete);
+    * compact (pure layout), constraint, rename and schema (pure
+      metadata): nothing."""
+    action = commit.get("action", "append")
+    if action in ("compact", "constraint", "rename", "schema"):
+        return []
+
+    def writer(rel: str) -> str:
+        return s.live[rel][0] if rel in s.live else s.schema
+
+    added = _adds(commit, s.schema)
+    if action in ("delete", "update"):
+        kind = "delete" if action == "delete" else "update_preimage"
+        units = [
+            _Unit(rel, writer(rel), kind, v, pos)
+            for rel, pos in _dv_diffs(table_path, commit)[0]
+        ]
+        if action == "update":
+            units += [
+                _Unit(rel, sch, "update_postimage", v)
+                for rel, sch, _ in added
+            ]
+        return units
+    units = []
+    if action in ("overwrite", "merge", "restore"):
+        units += [
+            _live_unit(
+                table_path, rel, writer(rel), "delete", v, s.live[rel][2]
+            )
+            for rel in commit.get("remove", [])
+            if rel in s.live
+        ]
+    if action != "restore":
+        return units + [_Unit(rel, sch, "insert", v) for rel, sch, _ in added]
+    dv_by_path = {e["path"]: e["dv"] for e in commit.get("dv", [])}
+    units += [
+        _live_unit(table_path, rel, sch, "insert", v, dv_by_path.get(rel))
+        for rel, sch, _ in added
+    ]
+    hidden, revealed = _dv_diffs(
+        table_path, commit, {rel for rel, _, _ in added}
+    )
+    for kind, pairs in (("delete", hidden), ("insert", revealed)):
+        units += [
+            _Unit(rel, writer(rel), kind, v, pos) for rel, pos in pairs
+        ]
+    return units
+
+
+def _change_units(
+    table_path: str, lo: int, hi: int, check=None
+) -> tuple[list[_Unit], _LogState]:
+    """The change plan of versions [*lo*, *hi*] and the state at *hi*,
+    from one forward fold: the state at *lo* - 1, then each commit's
+    units against the state just before it. *check*, when given, is
+    called as ``check(v, commit)`` on each commit first and may refuse
+    it by raising."""
+    units: list[_Unit] = []
+
+    def visit(v: int, commit: dict, s) -> None:
+        if check is not None:
+            check(v, commit)
+        units.extend(_commit_units(table_path, v, commit, s))
+
+    end = _state(table_path, hi, since=lo - 1, visit=visit)
+    return units, end
+
+
+_TAGS = ("_change_type", "_commit_version")
+
+
+def _read_units(
     spark: SparkSession,
     table_path: str,
-    pairs: list[tuple[str, list]],
-    read_schema: str | None = None,
+    units: list[_Unit],
+    widened: Mapping[str, str],
 ) -> DataFrame:
-    """Rows of each (rel file, [row positions]) — one scan over the
-    involved files, one broadcast semi-join on (file, row_index).
+    """The PHYSICAL rows of *units* (non-empty), each tagged with its
+    unit's ``_change_type`` and ``_commit_version`` — ONE parquet scan
+    of their distinct files, whatever the number of units.
 
-    Always mergeSchema: the position set can span files written under
-    DIFFERENT writer schemas (an update chasing rows into files an
-    earlier update created, a CDF range crossing an evolution commit).
-    Letting Spark infer one generation's schema would silently DROP
-    columns the other generations carry from the returned images
-    (ADVICE r13 #1) — union by name with NULL-fill, like
-    :func:`_read_entries` does."""
+    The scan's schema is the union of the units' writer schemas, the
+    *widened* types last (:func:`_union_schema_of`): the log records
+    every file's schema, so nothing infers one (Delta's rule) and every
+    generation reads with NULL-fill and native promotion. Each scan row
+    is exploded to the keys ``row_index`` and -1 and equi-joined on
+    (file, key) against a broadcast tag frame: whole-file and exclude
+    units carry key -1, position units their row indexes, so a file in
+    several units (appended at v, DV-deleted at v+1) is scanned once and
+    emits one row per unit. Exclude units then drop their DV positions
+    through one broadcast anti-join on (unit, row_index). Per-row cost
+    stays one hash probe per key, however many positions the plan
+    lists."""
+    import numpy as np
+    import pandas as pd
     import pyspark.sql.functions as F
 
-    reader = spark.read
-    if read_schema is not None:
-        # widened tables: mergeSchema cannot union int32/int64
-        # generations — the explicit schema promotes them natively
-        reader = reader.schema(read_schema)
-    else:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(
-        *(os.path.join(table_path, rel) for rel, _ in pairs)
+    def frame(cols: dict, ddl: str) -> DataFrame:
+        # shipped over the Arrow path, like _positions_df
+        return spark.createDataFrame(pd.DataFrame(cols), schema=ddl)
+
+    def per_row(values, counts, dtype=np.int64):
+        return np.repeat(np.array(values, dtype=dtype), counts)
+
+    rels = dict.fromkeys(u.rel for u in units)
+    scan = spark.read.schema(
+        _union_schema_of((u.schema for u in units), widened)
+    ).parquet(*(os.path.join(table_path, r) for r in rels))
+    data = scan.columns
+    keys = [
+        np.asarray(
+            [-1] if u.positions is None or u.exclude else u.positions,
+            dtype=np.int64,
+        )
+        for u in units
+    ]
+    n = [len(k) for k in keys]
+    tags = frame(
+        {
+            "__file": per_row([u.rel for u in units], n, object),
+            "__key": np.concatenate(keys),
+            "__unit": per_row(range(len(units)), n),
+            "_change_type": per_row([u.change_type for u in units], n, object),
+            "_commit_version": per_row([u.version for u in units], n),
+        },
+        "__file string, __key long, __unit long, "
+        "_change_type string, _commit_version long",
     )
-    sel = _positions_df(spark, pairs)
-    cols = df.columns
-    return (
-        df.withColumn(
-            "__dv_file",
+    out = (
+        scan.select(
+            *data,
             F.regexp_extract(
                 F.col("_metadata.file_path"), _DV_KEY_RE, 1
-            ),
+            ).alias("__file"),
+            F.col("_metadata.row_index").alias("__idx"),
         )
-        .withColumn("__dv_idx", F.col("_metadata.row_index"))
-        .join(F.broadcast(sel), ["__dv_file", "__dv_idx"], "left_semi")
-        .select(*cols)
+        .withColumn(
+            "__key", F.explode(F.array("__idx", F.lit(-1).cast("long")))
+        )
+        .join(F.broadcast(tags), ["__file", "__key"])
     )
+    hidden = {
+        i: np.asarray(u.positions, dtype=np.int64)
+        for i, u in enumerate(units)
+        if u.exclude and len(u.positions)
+    }
+    if hidden:
+        gone = frame(
+            {
+                "__unit": per_row(
+                    list(hidden), [len(p) for p in hidden.values()]
+                ),
+                "__idx": np.concatenate(list(hidden.values())),
+            },
+            "__unit long, __idx long",
+        )
+        out = out.join(F.broadcast(gone), ["__unit", "__idx"], "left_anti")
+    return out.select(*data, *_TAGS)
 
 
 def tf_changes(
@@ -4170,12 +4298,22 @@ def tf_changes(
     to_version: int | None = None,
 ) -> DataFrame:
     """The table's row-level changes over versions [from, to], tagged
-    with ``_change_type`` ('insert' | 'delete') and ``_commit_version``
-    — the incremental-consumer contract when the history is NOT
-    append-only (the plain stream source refuses such logs). Schemas
-    across generations union by name with NULL-fill."""
-    import pyspark.sql.functions as F
+    with ``_change_type`` ('insert' | 'delete' | 'update_preimage' |
+    'update_postimage') and ``_commit_version`` — the
+    incremental-consumer contract when the history is NOT append-only
+    (the plain stream source refuses such logs).
 
+    Plan, then one scan: one forward fold lists the range's units
+    (:func:`_change_units`), and :func:`_read_units` reads their
+    distinct files in one parquet scan under the log's own schemas and
+    tags the rows by broadcast joins — building the frame starts no
+    Spark job (beyond Spark's own parallel listing when the files
+    outnumber its discovery threshold), and forcing it runs the scan
+    plus one broadcast per tag frame, however many commits the range
+    holds. Rows surface under
+    the TO-version's column mapping and ADD/DROP/widen state (the shape
+    of the snapshot a consumer maintains from the feed), generations
+    NULL-filled; data columns come first, then the two tags."""
     head = latest_version(table_path)
     if head < 0:
         raise FileNotFoundError(f"no table at {table_path}")
@@ -4184,102 +4322,10 @@ def tf_changes(
         raise ValueError(
             f"change range [{from_version}, {to}] outside [0, {head}]"
         )
-    plan: list[tuple[str, list, str, int]] = []  # (read, what, type, v)
-    fschemas: dict[str, str] = {}  # writer schema of each file read
-
-    def visit(v: int, commit: dict, s) -> None:
-        action = commit.get("action", "append")
-        if action in ("compact", "constraint", "rename", "schema"):
-            return  # pure layout / pure metadata: no logical change
-        added = _adds(commit, s.schema)
-        adds = [rel for rel, _, _ in added]
-        fschemas.update((rel, sch) for rel, sch, _ in added)
-        for rel in commit.get("remove", []) + [
-            e["path"] for e in commit.get("dv", [])
-        ]:
-            if rel in s.live:
-                fschemas.setdefault(rel, s.live[rel][0])
-        if action in ("delete", "update"):
-            # delete: the newly-hidden rows. update: the same rows as
-            # PREIMAGES, with the commit's added files carrying the
-            # POSTIMAGES (they hold only updated rows by construction)
-            hidden, _ = _dv_diffs(table_path, commit)
-            if hidden:
-                kind = "delete" if action == "delete" else "update_preimage"
-                plan.append(("positions", hidden, kind, v))
-            if action == "update" and adds:
-                plan.append(("files", adds, "update_postimage", v))
-            return
-        if action in ("overwrite", "merge", "restore") and commit.get(
-            "remove"
-        ):
-            # the removed files' THEN-LIVE rows (their v-1 DVs applied)
-            removed = [
-                (rel, s.live[rel][1], s.live[rel][2])
-                for rel in commit["remove"]
-                if rel in s.live
-            ]
-            if removed:
-                plan.append(("entries", removed, "delete", v))
-        if action == "restore":
-            # re-added files insert their POST-DV rows (the commit can
-            # attach the target's sidecar to a file it re-adds); DV
-            # reconciliation on files live across both snapshots emits
-            # newly-hidden positions as deletes and UN-deleted
-            # positions as inserts (rows reappearing is the point of a
-            # restore past a delete)
-            dv_by_path = {
-                e["path"]: e["dv"] for e in commit.get("dv", [])
-            }
-            if adds:
-                entries = [(rel, {}, dv_by_path.get(rel)) for rel in adds]
-                plan.append(("entries", entries, "insert", v))
-            hidden, revealed = _dv_diffs(table_path, commit, set(adds))
-            if hidden:
-                plan.append(("positions", hidden, "delete", v))
-            if revealed:
-                plan.append(("positions", revealed, "insert", v))
-            return
-        if adds:
-            plan.append(("files", adds, "insert", v))
-
-    # one forward fold: the state at from_version - 1, then each
-    # commit of the range against the state just before it
-    end = _state(table_path, to, since=from_version - 1, visit=visit)
-
-    def _rs(rels) -> str | None:
-        """Explicit promoted read schema over *rels* — only widened
-        tables need one (mergeSchema handles same-width evolution)."""
-        if not end.widened:
-            return None
-        return _union_schema_of(
-            (fschemas[r] for r in rels if r in fschemas), end.widened
-        )
-
-    def _read(how: str, what: list) -> DataFrame:
-        if how == "files":
-            return spark.read.option("mergeSchema", "true").parquet(
-                *(os.path.join(table_path, rel) for rel in what)
-            )
-        if how == "positions":
-            return _rows_at_positions(
-                spark, table_path, what, read_schema=_rs(r for r, _ in what)
-            )
-        return _read_entries(
-            spark,
-            table_path,
-            what,
-            True,
-            read_schema=_rs(r for r, _, _ in what),
-        )
-
-    pieces = [
-        _read(how, what)
-        .withColumn("_change_type", F.lit(kind))
-        .withColumn("_commit_version", F.lit(v).cast("long"))
-        for how, what, kind, v in plan
-    ]
-    if not pieces:
+    units, end = _change_units(table_path, from_version, to)
+    if units:
+        df = _read_units(spark, table_path, units, end.widened)
+    else:
         from pyspark.sql.types import LongType, StringType
 
         schema = (
@@ -4287,20 +4333,11 @@ def tf_changes(
             .schema.add("_change_type", StringType())
             .add("_commit_version", LongType())
         )
-        return _to_logical_df(
-            spark.createDataFrame([], schema), end.mapping
-        )
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p, allowMissingColumns=True)
-    # change rows come off physical file scans — surface the logical
-    # view (the mapping never covers _change_type/_commit_version),
-    # under the TO-version's ADD/DROP state so the feed's shape matches
-    # the snapshot a consumer maintains from it
+        df = spark.createDataFrame([], schema)
+    df = _apply_schema_ops_physical(df, end.added, end.dropped, end.widened)
+    # NULL-filled ADD columns land after the tags: data columns first
     return _to_logical_df(
-        _apply_schema_ops_physical(
-            out, end.added, end.dropped, end.widened
-        ),
+        df.select(*(c for c in df.columns if c not in _TAGS), *_TAGS),
         end.mapping,
     )
 
@@ -4593,24 +4630,12 @@ class _TfFilePartition(InputPartition):
 
 
 class _TfChangePartition(InputPartition):
-    """One CDF work unit: a data file plus the position set that turns
-    it into change rows. ``positions=None`` means every row;
-    ``exclude=True`` flips the set (a removed file's then-live rows =
-    all minus its DV)."""
+    """One CDF work unit: a :class:`_Unit` of the change plan and the
+    full path of its file."""
 
-    def __init__(
-        self,
-        path: str,
-        change_type: str,
-        version: int,
-        positions: list[int] | None = None,
-        exclude: bool = False,
-    ):
+    def __init__(self, path: str, unit: _Unit):
         self.path = path
-        self.change_type = change_type
-        self.version = version
-        self.positions = positions
-        self.exclude = exclude
+        self.unit = unit
 
 
 class TableFormatStreamReader(DataSourceStreamReader):
@@ -4697,86 +4722,36 @@ class TableFormatStreamReader(DataSourceStreamReader):
 
 class TableFormatCdfStreamReader(TableFormatStreamReader):
     """The CHANGE-FEED stream: offsets are still log versions, but each
-    micro-batch emits the version's row-level CHANGES instead of its
-    raw appends, so non-append history (DV deletes, overwrites, merges)
-    streams instead of erroring — Delta's readChangeFeed streaming
-    source, computed from the log. Rows gain ``_change_type`` and
-    ``_commit_version``; a compact emits nothing (pure layout). Work
-    units stay one-file partitions (the executor applies the position
-    set with numpy), so backlog parallelism matches the batch scan."""
+    micro-batch emits the versions' row-level CHANGES instead of their
+    raw appends, so non-append history (DV deletes, overwrites, merges,
+    restores) streams instead of erroring — Delta's readChangeFeed
+    streaming source, computed from the log. Rows gain ``_change_type``
+    and ``_commit_version``; a compact emits nothing (pure layout).
+
+    The change plan is the batch feed's (:func:`_change_units`); each
+    of its units becomes one one-file partition whose executor applies
+    the unit's position set with numpy, so backlog parallelism matches
+    the batch scan. A schema commit is refused: the stream's row shape
+    is fixed at stream start."""
+
+    @staticmethod
+    def _fixed_shape(v: int, commit: dict) -> None:
+        if commit.get("action") == "schema":
+            raise ValueError(
+                f"version {v} is a schema commit (ADD/DROP "
+                "COLUMN): the change-feed STREAM's row shape is "
+                "fixed at stream start — restart the stream from "
+                "here (batch tf_changes handles evolution)"
+            )
 
     def partitions(self, start, end):
         lo, hi = int(start["version"]), int(end["version"])
         self._observe_end(hi)
-        parts: list[_TfChangePartition] = []
         t = self.table_path
-
-        def visit(v: int, commit: dict, s) -> None:
-            action = commit.get("action", "append")
-            if action in ("compact", "constraint", "rename"):
-                return
-            if action == "schema":
-                raise ValueError(
-                    f"version {v} is a schema commit (ADD/DROP "
-                    "COLUMN): the change-feed STREAM's row shape is "
-                    "fixed at stream start — restart the stream from "
-                    "here (batch tf_changes handles evolution)"
-                )
-            adds = [_add_path(e) for e in commit.get("add", [])]
-            if action in ("delete", "update"):
-                kind = "delete" if action == "delete" else "update_preimage"
-                parts.extend(
-                    _TfChangePartition(os.path.join(t, rel), kind, v, pos)
-                    for rel, pos in _dv_diffs(t, commit)[0]
-                )
-                if action == "update":
-                    parts.extend(
-                        _TfChangePartition(
-                            os.path.join(t, rel), "update_postimage", v
-                        )
-                        for rel in adds
-                    )
-                return
-
-            def unhidden(rel: str, dv: str | None, kind: str):
-                """Every row of *rel* that its sidecar *dv* leaves live."""
-                excl = sorted(_dv_set(t, dv)) if dv else None
-                return _TfChangePartition(
-                    os.path.join(t, rel), kind, v, excl,
-                    exclude=excl is not None,
-                )
-
-            if action in ("overwrite", "merge", "restore"):
-                parts.extend(
-                    unhidden(rel, s.live[rel][2], "delete")
-                    for rel in commit.get("remove", [])
-                    if rel in s.live
-                )
-            if action == "restore":
-                # mirrors tf_changes: re-adds insert post-DV rows; DV
-                # diffs on still-live files emit newly-hidden deletes
-                # and un-deleted (revived) inserts
-                dv_by_path = {
-                    e["path"]: e["dv"] for e in commit.get("dv", [])
-                }
-                parts.extend(
-                    unhidden(rel, dv_by_path.get(rel), "insert")
-                    for rel in sorted(set(adds))
-                )
-                hidden, revealed = _dv_diffs(t, commit, set(adds))
-                for kind, pairs in (("delete", hidden), ("insert", revealed)):
-                    parts.extend(
-                        _TfChangePartition(os.path.join(t, rel), kind, v, pos)
-                        for rel, pos in pairs
-                    )
-                return
-            parts.extend(
-                _TfChangePartition(os.path.join(t, rel), "insert", v)
-                for rel in adds
-            )
-
-        _state(t, hi, since=lo, visit=visit)
-        return parts
+        units, _ = _change_units(t, lo + 1, hi, check=self._fixed_shape)
+        return [
+            _TfChangePartition(os.path.join(t, u.rel), u) for u in units
+        ]
 
     def read(self, partition: _TfChangePartition):
         # Same Arrow-batch discipline as the plain reader (guide §4):
@@ -4786,24 +4761,23 @@ class TableFormatCdfStreamReader(TableFormatStreamReader):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        u = partition.unit
         tbl = pq.read_table(partition.path)
-        if partition.positions is not None:
-            pos = np.asarray(partition.positions, dtype=np.int64)
-            if partition.exclude:
+        if u.positions is not None:
+            pos = np.asarray(u.positions, dtype=np.int64)
+            if u.exclude:
                 mask = np.ones(tbl.num_rows, dtype=bool)
                 mask[pos] = False
                 pos = np.nonzero(mask)[0]
             tbl = tbl.take(pos)
-        names = tbl.column_names + ["_change_type", "_commit_version"]
+        names = tbl.column_names + list(_TAGS)
         for batch in tbl.to_batches():
             n = batch.num_rows
             yield pa.RecordBatch.from_arrays(
                 list(batch.columns)
                 + [
-                    pa.array([partition.change_type] * n),
-                    pa.array(
-                        np.full(n, partition.version, dtype=np.int64)
-                    ),
+                    pa.array([u.change_type] * n),
+                    pa.array(np.full(n, u.version, dtype=np.int64)),
                 ],
                 names=names,
             )
@@ -4930,7 +4904,9 @@ def stream_table_format_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"expected >=2 version-rate-limited micro-batches, got "
             f"{len(epochs)}"
         )
-    snap = spark.read.parquet(os.path.join(out_dir, "b*"))
+    # the matched epoch dirs, not the glob: FileStreamSink probes a glob
+    # path for a sink log and logs a FileNotFoundException when absent
+    snap = spark.read.parquet(*epochs)
     return (
         snap.groupBy((F.col("user_id") % 8).alias("shard"))
         .agg(
@@ -5031,7 +5007,7 @@ def stream_table_format_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"expected >=2 version-rate-limited micro-batches, got "
             f"{len(epochs)}"
         )
-    feed = spark.read.parquet(os.path.join(out_dir, "b*"))
+    feed = spark.read.parquet(*epochs)
     return (
         feed.groupBy(F.col("_change_type").alias("change_type"))
         .agg(

@@ -368,6 +368,42 @@ class TestOverlap:
         # every sibling ran to completion before the raise
         assert sorted(settled) == ["a", "b", "first", "second"]
 
+    def test_exiting_signal_outranks_an_earlier_failure(self):
+        from fluent_bit_filter_math_spark.concurrency import overlap
+
+        def fail():
+            raise ValueError("earlier")
+
+        def interrupt():
+            raise KeyboardInterrupt("later")
+
+        with pytest.raises(KeyboardInterrupt, match="later") as info:
+            overlap(fail, lambda: 1, interrupt)
+        assert info.value.__notes__ == [
+            "overlap sibling also failed: ValueError: earlier"
+        ]
+
+    def test_notes_name_every_other_failure(self):
+        from fluent_bit_filter_math_spark.concurrency import overlap
+
+        def fail(exc):
+            def _t():
+                raise exc
+
+            return _t
+
+        with pytest.raises(ValueError, match="first") as info:
+            overlap(
+                fail(ValueError("first")),
+                lambda: 1,
+                fail(TypeError("second")),
+                fail(RuntimeError("third")),
+            )
+        assert info.value.__notes__ == [
+            "overlap sibling also failed: TypeError: second",
+            "overlap sibling also failed: RuntimeError: third",
+        ]
+
     def test_overlapped_appends_commit_once_per_table(
         self, spark, tmp_path
     ):

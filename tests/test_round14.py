@@ -1,7 +1,7 @@
 """Round 14, part 1: the ADVICE r13 fixes.
 
-1. _rows_at_positions reads with mergeSchema (position-addressed reads
-   across evolved writer schemas must not drop columns),
+1. position-addressed change-feed reads across evolved writer schemas
+   must not drop columns,
 2. CHECK-constraint races: append rebase over an interleaved
    constraint commit re-validates; restore validates resurrected rows,
 3. kafka wire: unknown compression flags answer protocol errors on
@@ -90,9 +90,7 @@ class TestConstraintRaces:
         v = tf.tf_restore(t, pre)
         assert tf.tf_read(spark, t, version=v).count() == 20
 
-    def test_rows_at_positions_merges_evolved_schemas(
-        self, tmp_path, spark
-    ):
+    def test_position_units_merge_evolved_schemas(self, tmp_path, spark):
         t = str(tmp_path / "t")
         tf.tf_append(
             spark.range(4).select(F.col("id").alias("k")), t
@@ -103,14 +101,17 @@ class TestConstraintRaces:
             ),
             t,
         )
-        files, _, evolved = tf._resolve(t, tf.latest_version(t))
-        assert evolved
-        pairs = [(rel, [0]) for rel, _, _ in files]
-        got = tf._rows_at_positions(spark, t, pairs)
+        s = tf._state(t)
+        assert s.evolved
+        units = [
+            tf._Unit(rel, sch, "delete", s.version, [0])
+            for rel, (sch, _, _) in s.live.items()
+        ]
+        got = tf._read_units(spark, t, units, s.widened)
         # the evolved-only column must survive a position-addressed
         # read that spans both generations
         assert "extra" in got.columns
-        assert got.count() == len(pairs)
+        assert got.count() == len(units)
 
 
 # ---------------------------------------------------------------------------

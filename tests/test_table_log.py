@@ -9,6 +9,10 @@
   concurrent folds never replace it with a shorter one.
 * Vacuum sweeps orphan publish temp files; a filesystem without hard
   links fails the commit loudly and leaves the table unchanged.
+* The change feed composes: a snapshot plus a window's changes is the
+  next snapshot, and the batch feed and the change-feed stream reader
+  emit the same rows. Building the batch feed starts no Spark job, and
+  forcing it runs a fixed number, however long the range.
 """
 
 from __future__ import annotations
@@ -22,6 +26,7 @@ import shutil
 import sys
 import threading
 import time
+import uuid
 from collections import Counter
 
 import pyspark.sql.functions as F
@@ -250,9 +255,8 @@ def _rewrite_checkpoints_pre_dv(t: str) -> None:
             )
 
 
-@pytest.mark.parametrize("seed", [7, 19, 31])
-def test_every_resolution_path_agrees(spark, tmp_path, seed):
-    t = str(tmp_path / "t")
+def _random_table(spark, t: str, seed: int) -> None:
+    """One seeded sequence of 25 operations that uses every kind."""
     table = _RandomTable(spark, t, seed)
     kinds = list(_KINDS) + [
         table.rng.choice(_KINDS) for _ in range(25 - len(_KINDS))
@@ -261,6 +265,12 @@ def test_every_resolution_path_agrees(spark, tmp_path, seed):
     table.run("append")
     for kind in kinds:
         table.run(kind)
+
+
+@pytest.mark.parametrize("seed", [7, 19, 31])
+def test_every_resolution_path_agrees(spark, tmp_path, seed):
+    t = str(tmp_path / "t")
+    _random_table(spark, t, seed)
     assert glob.glob(os.path.join(t, "_log", "*.checkpoint.json"))
     assert os.listdir(os.path.join(t, "_dv"))
 
@@ -488,3 +498,149 @@ def test_pruned_counts_match_per_value_pruned_files(spark, tmp_path):
     assert total == tf.tf_pruned_files(t, [])[1] == 3
     # the renamed column still prunes by its physical stats
     assert counts[5] == 1 and counts[99] == 0
+
+
+_TAGS = ("_change_type", "_commit_version")
+
+
+def _bag(rows, cols) -> Counter:
+    """A multiset of rows as (column, value) tuples over *cols*."""
+    return Counter(tuple((c, r.get(c)) for c in cols) for r in rows)
+
+
+@pytest.mark.parametrize("seed", [7, 19, 31])
+def test_change_feed_composes_and_matches_the_stream(spark, tmp_path, seed):
+    """(a) For every window [a, b] without a schema or rename commit,
+    snapshot a-1 minus the window's deletes and preimages plus its
+    inserts and postimages is snapshot b. (b) For every window the
+    change-feed stream reader accepts (no schema commit), the batch feed
+    equals the rows its partitions read, mapped to the feed's logical
+    columns."""
+    t = str(tmp_path / "t")
+    _random_table(spark, t, seed)
+    head = tf.latest_version(t)
+    action = {h["version"]: h["action"] for h in tf.tf_history(t)}
+    snaps = [
+        [r.asDict() for r in tf.tf_read(spark, t, version=v).collect()]
+        for v in range(head + 1)
+    ]
+    checked = composed = 0
+    for a in range(head + 1):
+        for b in range(a, head + 1):
+            if action[b] == "schema":
+                break  # every later window holds it too
+            feed = tf.tf_changes(spark, t, a, b)
+            data = [c for c in feed.columns if c not in _TAGS]
+            rows = [r.asDict() for r in feed.collect()]
+            if "rename" not in {action[v] for v in range(a, b + 1)}:
+                net = _bag(snaps[a - 1] if a else [], data)
+                net.update(
+                    _bag(
+                        (r for r in rows if r["_change_type"] in
+                         ("insert", "update_postimage")),
+                        data,
+                    )
+                )
+                net.subtract(
+                    _bag(
+                        (r for r in rows if r["_change_type"] in
+                         ("delete", "update_preimage")),
+                        data,
+                    )
+                )
+                assert min(net.values(), default=0) >= 0, (a, b)
+                assert +net == _bag(snaps[b], data), (a, b)
+                composed += 1
+            s = tf._state(t, b)
+            inv = {p: l for l, p in s.mapping.items()}
+            reader = tf.TableFormatCdfStreamReader({"path": t})
+            streamed = [
+                {inv.get(k, k): x for k, x in r.items() if k not in s.dropped}
+                for p in reader.partitions({"version": a - 1}, {"version": b})
+                for batch in reader.read(p)
+                for r in batch.to_pylist()
+            ]
+            tagged = data + list(_TAGS)
+            assert _bag(streamed, tagged) == _bag(rows, tagged), (a, b)
+            checked += 1
+    assert composed >= 10 and checked >= composed
+
+
+def _jobs(spark, fn):
+    """(fn(), the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"tf-changes-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_change_feed_is_one_scan(spark, tmp_path, monkeypatch):
+    """Over appends, DV deletes, updates and merges, building the feed
+    starts no Spark job and sets no mergeSchema read, forcing it runs at
+    most 3 jobs (the scan and the two broadcast tag frames) for 4
+    commits and for 12 alike, and the columns are the data columns,
+    then the tags — across an ADD COLUMN too, and in an empty range
+    after a DROP COLUMN."""
+    t = str(tmp_path / "t")
+
+    def rows(lo, n=6):
+        return spark.range(lo, lo + n).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 3).alias("g"),
+            F.col("id").cast("double").alias("v"),
+        ).coalesce(1)
+
+    tf.tf_append(rows(0), t)
+    for i in range(3):
+        base = 100 * (i + 1)
+        tf.tf_append(rows(base), t)
+        tf.tf_delete(spark, t, [("k", "=", base + 1)])
+        tf.tf_update(spark, t, [("k", "=", base + 2)], {"v": F.col("v") + 1.0})
+        tf.tf_merge(
+            spark,
+            t,
+            spark.createDataFrame(
+                [(base + 3, 0, 0.5, False), (base + 4, 0, 0.0, True)],
+                "k long, g long, v double, _delete boolean",
+            ).coalesce(1),
+            "k",
+        )
+    head = tf.latest_version(t)
+    assert head == 12
+
+    options: list = []
+    real_option = type(spark.read).option
+
+    def option(self, key, value):
+        options.append(key)
+        return real_option(self, key, value)
+
+    for lo in (head - 3, head - 11):
+        monkeypatch.setattr(type(spark.read), "option", option)
+        feed, built = _jobs(spark, lambda: tf.tf_changes(spark, t, lo, head))
+        monkeypatch.undo()
+        assert built == 0, f"building [{lo}, {head}] ran {built} job(s)"
+        assert "mergeSchema" not in options
+        _, forced = _jobs(
+            spark, lambda: feed.write.format("noop").mode("overwrite").save()
+        )
+        assert forced <= 3, f"forcing [{lo}, {head}] ran {forced} jobs"
+        assert feed.columns == ["k", "g", "v", *_TAGS]
+        kinds = {r["_change_type"] for r in feed.collect()}
+        assert kinds == {"insert", "delete", "update_preimage", "update_postimage"}
+
+    tf.tf_add_column(t, "w", "bigint")
+    tf.tf_append(rows(900).withColumn("w", F.col("k")), t)
+    assert tf.tf_changes(spark, t, head - 1).columns == [
+        "k", "g", "v", "w", *_TAGS
+    ]
+    # a range of metadata commits only is empty, in the snapshot's shape
+    tf.tf_drop_column(t, "g")
+    assert tf.tf_changes(spark, t, tf.latest_version(t)).columns == [
+        "k", "v", "w", *_TAGS
+    ]
